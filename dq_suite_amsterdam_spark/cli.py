@@ -149,6 +149,7 @@ def main(argv: list[str] | None = None) -> int:
         from .notifications import notify
 
         notify(result, settings)
+    result.cleanup()
     print(
         json.dumps(
             {

@@ -158,18 +158,6 @@ class ValidationSettings:
     run_id: str | None = None
     violation_mode: str = "row"
     violation_limit: int | None = 100_000
-    #: cache the input between passes. Default OFF: at the design scale
-    #: (10^12 rows) the table cannot be cached, and re-scanning columnar
-    #: storage with per-pass column pruning is cheaper than materializing
-    #: every column into the cache. Turn on for small, expensive-to-compute
-    #: inputs (e.g. the output of a prior transformation).
-    persist_input: bool = False
-    #: piggy-back the per-rule stats aggregation on the violation scan via
-    #: ``df.observe`` (Spark CollectMetrics): ONE full-width pass instead of
-    #: two, and the violation rows come out persisted so downstream
-    #: consumption doesn't rescan. Falls back to the separate stats agg when
-    #: a rule needs a distinct aggregate or there are no predicate rules.
-    fuse_stats_in_violation_scan: bool = True
     write_results: bool = False
     output_path: str | None = None
     output_format: str = "parquet"

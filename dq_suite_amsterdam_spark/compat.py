@@ -121,7 +121,12 @@ def run_validation(
         from .notifications import notify
 
         notify(result, settings)
-    return (result.success, result) if debug_mode else result.success
+    if debug_mode:
+        return result.success, result
+    # the caller never sees the frames: release what the run cached, or a
+    # later run over a rewritten input can read this run's stale cache
+    result.cleanup()
+    return result.success
 
 
 def _write_star_schema_to_catalog(

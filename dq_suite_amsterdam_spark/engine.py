@@ -15,8 +15,10 @@ Pass structure (SURVEY.md §3.1 "Our lifecycle replacement"):
                               expensive predicates must live only in the
                               codegen'd array (BASELINE.md perf note 9).
                               Heavy-buffer aggregates (percentile, exact
-                              distinct, bounded distinct-set) ride a separate
-                              parallel agg pass instead.
+                              distinct, bounded distinct-set) run as one
+                              parallel agg job per rule instead. A table with
+                              no predicate rules runs the cheap aggregates as
+                              one plain agg.
   3. per-key groupBy plans -> uniqueness/compound-uniqueness (duplicate keys,
                               map-side partial agg handles skew; AQE on)
   4. anti-join plans       -> referential rules (broadcast small ref sides)
@@ -232,26 +234,6 @@ class ValidationEngine:
         for c, rid in zip(compiled, ids):
             c.regel_id = rid
 
-        persisted = False
-        n_scans = sum(
-            1 for c in compiled if c.kind in ("predicate", "agg_observed", "groupby_unique", "referential")
-        )
-        if self.settings.persist_input and n_scans > 1:
-            # starved-scan guard (guide §2.5 input skew): a small or
-            # unsplittable input plans into fewer scan tasks than cores,
-            # serializing the fused scan AND every pass that reads the
-            # cache (the persist pins the input's partitioning). Spread by
-            # the unique identifier before persisting; results are
-            # partitioning-independent (aggregates + deterministic
-            # violation-row selection). No-op on healthy inputs.
-            key_cols = [c for c in id_cols if c in df.columns]
-            if key_cols:
-                from .operators.textstats import spread_small_scan
-
-                df = spread_small_scan(df, key_cols)
-            df = df.persist()
-            persisted = True
-
         by_kind: dict[str, list[CompiledRule]] = {}
         for c in compiled:
             by_kind.setdefault(c.kind, []).append(c)
@@ -272,7 +254,6 @@ class ValidationEngine:
         observed_rules = by_kind.get("agg_observed", [])
         observable_rules = [c for c in observed_rules if c.observable]
         distinct_rules = [c for c in observed_rules if not c.observable]
-        fuse = bool(self.settings.fuse_stats_in_violation_scan and predicate_rules)
 
         n_violation_rows = None
         # run-scoped persist registry, passed EXPLICITLY down the call chain
@@ -281,7 +262,7 @@ class ValidationEngine:
         # lists); list.append is GIL-atomic, so pool-thread helpers may
         # append concurrently
         persisted_frames: list[DataFrame] = []
-        stats_fut = distinct_fut = uniq_futs = ref_futs = drift_fut = None
+        drift_fut = None
         phase_t: dict[str, float] = {"compile": time.monotonic() - t0}
         drift_rules = by_kind.get("drift", [])
         # the distinct-agg and drift passes touch only a handful of (possibly
@@ -291,7 +272,7 @@ class ValidationEngine:
         # re-scanning + re-deriving from the wide input (bandwidth, not CPU,
         # is the scaling ceiling on dense hosts — BENCH/BASELINE.md notes).
         narrow_df = None
-        if fuse and (len(distinct_rules) + len(drift_rules)) >= 2:
+        if (len(distinct_rules) + len(drift_rules)) >= 2:
             narrow_cols = sorted(
                 {
                     c.attribute
@@ -304,29 +285,22 @@ class ValidationEngine:
                 persisted_frames.append(narrow_df)
 
         with ThreadPoolExecutor(max_workers=8) as pool:
-            if fuse:
-                # separate tiny aggs only for exact-DISTINCT / heavy-buffer
-                # rules, which can't ride CollectMetrics — ONE JOB PER RULE,
-                # submitted concurrently: a combined agg that mixes a
-                # COUNT(DISTINCT) with collect_set/percentile buffers plans
-                # an Expand that multiplies the (narrow, cached) input, and
-                # each single-rule agg prunes to its one column (same
-                # split profiling.profile_table uses). Values unchanged —
-                # every observed_expr is computed over the same rows.
-                if distinct_rules:
-                    distinct_fut = [
-                        pool.submit(
-                            self._run_stats_pass,
-                            narrow_df if narrow_df is not None else df,
-                            [],
-                            [cr],
-                        )
-                        for cr in distinct_rules
-                    ]
-            else:
-                stats_fut = pool.submit(
-                    self._run_stats_pass, df, predicate_rules, observed_rules
+            # separate tiny aggs only for exact-DISTINCT / heavy-buffer
+            # rules, which can't ride CollectMetrics — ONE JOB PER RULE,
+            # submitted concurrently: a combined agg that mixes a
+            # COUNT(DISTINCT) with collect_set/percentile buffers plans
+            # an Expand that multiplies the (narrow, cached) input, and
+            # each single-rule agg prunes to its one column (same
+            # split profiling.profile_table uses). Values unchanged —
+            # every observed_expr is computed over the same rows.
+            distinct_futs = [
+                pool.submit(
+                    self._run_stats_pass,
+                    narrow_df if narrow_df is not None else df,
+                    [cr],
                 )
+                for cr in distinct_rules
+            ]
             # uniqueness/referential need total_rows only for percentages —
             # the full jobs (aggregation AND shaped violation frames) run on
             # pool threads, overlapping the fused scan; totals fill in after
@@ -370,7 +344,7 @@ class ValidationEngine:
                     self.baseline_store,
                 )
 
-            if fuse:
+            if predicate_rules:
                 # ONE full-width pass: stats aggregates observed on the same
                 # scan that extracts violation rows (df.observe /
                 # CollectMetrics); the violation frame is persisted so the
@@ -382,14 +356,11 @@ class ValidationEngine:
                 # text (and codegen cache keys) identical across repeated
                 # runs of the same suite
                 obs = Observation(f"dq_stats_{rule_set_hash(rd.rules)}")
-                # include_unexpected=False: the expensive predicate sums are
-                # NOT in the observe — per-rule unexpected counts come from
-                # the persisted violation frame below (see _stats_exprs)
+                # the expensive predicate sums are NOT in the observe —
+                # per-rule unexpected counts come from the persisted
+                # violation frame below (see _stats_exprs)
                 observed_df = df.observe(
-                    obs,
-                    *self._stats_exprs(
-                        predicate_rules, observable_rules, include_unexpected=False
-                    ),
+                    obs, *self._stats_exprs(predicate_rules, observable_rules)
                 )
                 # persist + count the PRE-limit violations: the observe node
                 # must deliver before any post-shuffle stage — AQE's
@@ -398,8 +369,7 @@ class ValidationEngine:
                 # data case). The limit/grouping shape then runs on the
                 # already-materialized frame, which is cheap.
                 viol = self._predicate_violations(
-                    observed_df, predicate_rules, id_cols, rd.mask_columns,
-                    apply_shape=False,
+                    observed_df, predicate_rules, id_cols, rd.mask_columns
                 ).persist()
                 persisted_frames.append(viol)
                 _t = time.monotonic()
@@ -427,33 +397,25 @@ class ValidationEngine:
                 }
                 phase_t["viol_counts"] = time.monotonic() - _t
                 stat_results, total_rows = self._stats_results_from_row(
-                    dict(obs.get),
-                    predicate_rules,
-                    observable_rules,
-                    unexpected_by_rule=u_map,
+                    dict(obs.get), predicate_rules, observable_rules, u_map
                 )
-                results += stat_results
-                if distinct_fut is not None:
-                    _t = time.monotonic()
-                    for _fut in distinct_fut:
-                        d_results, _ = _fut.result()
-                        results += d_results
-                    phase_t["distinct_wait"] = time.monotonic() - _t
             else:
+                # no violation scan to ride: the same observable aggregates
+                # run as one plain agg (a violation scan over an empty
+                # array could not carry v.regelId)
                 _t = time.monotonic()
-                stat_results, total_rows = stats_fut.result()
-                phase_t["stats_wait"] = time.monotonic() - _t
-                results += stat_results
-                if predicate_rules:
-                    violation_frames.append(
-                        self._predicate_violations(
-                            df,
-                            predicate_rules,
-                            id_cols,
-                            rd.mask_columns,
-                            persisted_frames=persisted_frames,
-                        )
-                    )
+                stat_results, total_rows = self._run_stats_pass(df, observable_rules)
+                phase_t["fused_scan"] = time.monotonic() - _t
+            _t = time.monotonic()
+            for fut in distinct_futs:
+                stat_results += fut.result()[0]
+            phase_t["distinct_wait"] = time.monotonic() - _t
+            # validatie row order is part of the output: predicate rules,
+            # then the aggregates observed on the scan ahead of the
+            # per-rule aggregate jobs; without predicate rules, suite order
+            by_rule = {id(r.compiled): r for r in stat_results}
+            order = observable_rules + distinct_rules if predicate_rules else observed_rules
+            results += [by_rule[id(c)] for c in predicate_rules + order]
             _t = time.monotonic()
             for cr, fut in uniq_futs:
                 dup_stats = fut.result()
@@ -495,9 +457,6 @@ class ValidationEngine:
         afwijking = self._build_afwijking(violation_frames, observed_failures, run_time)
         phase_t["build_outputs"] = time.monotonic() - _t
 
-        if persisted:
-            persisted_frames.append(df)
-
         failed_rules = [r.compiled.rule for r in results if not r.success]
         wall = time.monotonic() - t0
         metrics = {
@@ -536,15 +495,15 @@ class ValidationEngine:
         self,
         predicate_rules: list[CompiledRule],
         observed_rules: list[CompiledRule],
-        include_unexpected: bool = True,
     ) -> list:
-        """``include_unexpected=False`` is the fused-mode shape: the per-rule
-        unexpected counts are NOT aggregated here — they come from counting
-        the persisted violation frame per regelId. Rationale: df.observe
-        (CollectMetrics) evaluates its aggregate expressions INTERPRETED per
-        row (no whole-stage codegen), so putting ``sum(violation_pred)`` in
-        the observe re-runs every regex/sha predicate a second time ~10x
-        slower than the codegen'd violation array right next to it (measured:
+        """Row count, per-rule condition and missing counts and the
+        observable rules' aggregates. The per-rule unexpected counts are
+        NOT aggregated here — they come from counting the persisted
+        violation frame per regelId. Rationale: df.observe (CollectMetrics)
+        evaluates its aggregate expressions INTERPRETED per row (no
+        whole-stage codegen), so putting ``sum(violation_pred)`` in the
+        observe re-runs every regex/sha predicate a second time ~10x slower
+        than the codegen'd violation array right next to it (measured:
         84-93s fused scan vs ~55s for both separate passes at 32 cores/16M
         rows). The remaining observed exprs (count, isNull sums, condition
         sums, min/max/mean) are cheap under interpretation."""
@@ -556,11 +515,6 @@ class ValidationEngine:
         # rule with the same (attribute, condition)
         miss_idx = self._miss_indices(predicate_rules)
         for i, cr in enumerate(predicate_rules):
-            if include_unexpected:
-                pred = cr.violation_pred
-                if cr.condition is not None:
-                    pred = cr.condition & pred
-                exprs.append(F.sum(pred.cast("long")).alias(f"u_{i}"))
             if cr.condition is not None:
                 exprs.append(F.sum(cr.condition.cast("long")).alias(f"n_{i}"))
             if miss_idx.get(i) == i:
@@ -593,24 +547,22 @@ class ValidationEngine:
         return out
 
     def _run_stats_pass(
-        self,
-        df: DataFrame,
-        predicate_rules: list[CompiledRule],
-        observed_rules: list[CompiledRule],
+        self, df: DataFrame, observed_rules: list[CompiledRule]
     ) -> tuple[list[RuleResult], int]:
-        exprs = self._stats_exprs(predicate_rules, observed_rules)
-        row = df.agg(*exprs).collect()[0].asDict()
-        return self._stats_results_from_row(row, predicate_rules, observed_rules)
+        """The aggregate rules' stats as one plain ``df.agg`` (no predicate
+        rules: there is no violation scan to observe)."""
+        row = df.agg(*self._stats_exprs([], observed_rules)).collect()[0].asDict()
+        return self._stats_results_from_row(row, [], observed_rules, {})
 
     def _stats_results_from_row(
         self,
         row: dict,
         predicate_rules: list[CompiledRule],
         observed_rules: list[CompiledRule],
-        unexpected_by_rule: dict[str, int] | None = None,
+        unexpected_by_rule: dict[str, int],
     ) -> tuple[list[RuleResult], int]:
-        """``unexpected_by_rule`` (fused mode): regelId -> violation-row count
-        from the persisted violation frame, replacing the u_i aggregates."""
+        """``unexpected_by_rule``: regelId -> violation-row count from the
+        persisted violation frame (empty without predicate rules)."""
         total = int(row["__total"])
 
         miss_idx = self._miss_indices(predicate_rules)
@@ -618,10 +570,7 @@ class ValidationEngine:
         for i, cr in enumerate(predicate_rules):
             # `or 0`: F.sum returns NULL on empty input / all-NULL condition
             element = int(row[f"n_{i}"] or 0) if f"n_{i}" in row else total
-            if unexpected_by_rule is not None:
-                unexpected = int(unexpected_by_rule.get(cr.regel_id, 0))
-            else:
-                unexpected = int(row[f"u_{i}"] or 0)
+            unexpected = int(unexpected_by_rule.get(cr.regel_id, 0))
             missing = int(row.get(f"m_{miss_idx[i]}") or 0) if i in miss_idx else 0
             denom = element - missing
             percent = (unexpected / denom * 100.0) if denom > 0 else None
@@ -654,8 +603,6 @@ class ValidationEngine:
         rules: list[CompiledRule],
         id_cols: list[str],
         mask_columns: list[str] | None,
-        apply_shape: bool = True,
-        persisted_frames: list | None = None,
     ) -> DataFrame:
         """ONE scan emitting (regelId, identifierVeldWaarde,
         afwijkendeAttribuutWaarde) for all predicate rules: per row build an
@@ -699,7 +646,7 @@ class ValidationEngine:
         ids_repr = F.concat(
             F.lit("[["), F.concat_ws(", ", *reprs), F.lit("]]")
         )
-        exploded = (
+        return (
             df.select(
                 *id_aliases,
                 F.array(*entries).alias("__v"),
@@ -717,11 +664,6 @@ class ValidationEngine:
                 F.col("v.value").alias("afwijkendeAttribuutWaarde"),
                 *carry,
             )
-        )
-        return (
-            self._apply_violation_shape(exploded, persisted_frames=persisted_frames)
-            if apply_shape
-            else exploded
         )
 
     def _apply_violation_shape(

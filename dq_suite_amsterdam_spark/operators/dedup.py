@@ -104,7 +104,6 @@ def minhash_signatures(
     n_hashes: int = 32,
     k: int = 8,
     hash_family: str = "xxhash64",
-    strategy: str = "groupby",
 ) -> DataFrame:
     """(id, sig: array<long>) — n minhashes over k-char shingles; each is
     ``min(hash_i(shingle))``.
@@ -114,35 +113,21 @@ def minhash_signatures(
     functions.portable_hash; used by the driver-oracle query so the banded
     LSH output is independently verifiable).
 
-    ``strategy``:
+    Explode shingles -> hash once -> ``groupBy(id)`` with n codegen'd
+    ``min(seeded_mix(h, i))`` aggregates. Everything stays in whole-stage
+    codegen; map-side partial aggregation collapses each doc's rows before
+    the shuffle (a doc's shingles live in one input partition), so the
+    exchange carries ~1 row per doc. Measured 1.8x faster than a single-pass
+    SQL ``aggregate`` over the shingle array (interpreted higher-order
+    functions) at sf0.1 (5.25s -> 2.84s), bit-identical output. Docs with
+    NULL text (no shingle array) produce no signature row (they cannot be
+    near-dups).
 
-    - ``"groupby"`` (default): explode distinct shingles -> hash once ->
-      ``groupBy(id)`` with n codegen'd ``min(seeded_mix(h, i))`` aggregates.
-      Everything stays in whole-stage codegen; map-side partial aggregation
-      collapses each doc's rows before the shuffle (a doc's shingles live in
-      one input partition), so the exchange carries ~1 row per doc.
-      Measured 1.8x faster than the HOF form at sf0.1 (5.25s -> 2.84s),
-      bit-identical output. Docs with NULL text (no shingle array) produce
-      no signature row (they cannot be near-dups; the HOF form emitted a
-      null-sig row that downstream LSH filtered out anyway).
-    - ``"agg"``: single-pass SQL ``aggregate`` over the shingle array —
-      no shuffle at all, but higher-order functions evaluate INTERPRETED
-      (never codegen'd), which costs more than the tiny post-partial-agg
-      shuffle it saves. Kept for shuffle-free contexts (e.g. streaming
-      per-batch signatures).
-
-    NOTE (agg strategy): built as SQL-expr strings, not Python lambdas —
-    PySpark collapses multiple structurally-similar Python-lambda
-    higher-order functions inside one expression tree (shared
-    lambda-variable ids), which silently made every seed produce the same
-    component. The expr form keeps the seeds distinct.
-
-    Cost shape: each distinct shingle is string-hashed ONCE (-> long), then
-    the n components re-hash the long with each seed — O(shingles * n)
+    Cost shape: each shingle is string-hashed ONCE (-> long), then the n
+    components re-hash the long with each seed — O(shingles * n)
     long-hashes, not O(shingles * n) string-hashes."""
     if hash_family == "xxhash64":
         base = "xxhash64(s)"
-        seeded = "xxhash64(h, cast(i AS int))"
         seeded_lit = "xxhash64(h, {i})"
     elif hash_family == "md5":
         from ..functions.portable_hash import PORTABLE_HASH_SQL, SEEDED_MIX_SQL
@@ -151,60 +136,47 @@ def minhash_signatures(
         # seeded re-hash: pure 61-bit integer mixer — bit-identical in
         # DuckDB and ~100x cheaper than md5 per (shingle, seed); md5 is
         # paid once per shingle in `base`
-        seeded = SEEDED_MIX_SQL.format(h="h", i="i")
         seeded_lit = SEEDED_MIX_SQL
     else:
         raise ValueError(f"unknown hash_family {hash_family!r}")
-    if strategy == "groupby":
-        # shingle generation WITHOUT the array path: explode the position
-        # sequence and substr in the same whole-stage-codegen span. The
-        # transform(...) char-shingle array is an interpreted HOF and
-        # array_distinct materializes every doc's shingle set — but min()
-        # over duplicate shingles equals min() over distinct ones, so
-        # MinHash needs neither. Hashing every POSITION costs ~1.15x more
-        # md5 calls than hashing distinct shingles, yet measured FASTER
-        # end-to-end (sf0.1 signatures: 3.10s -> 2.81s md5, 2.00s -> 1.80s
-        # xxhash64; bit-identical output). Set semantics (ngram_jaccard)
-        # still use shingles_frame's distinct arrays.
-        from .textstats import normalized_text_col, spread_small_scan
+    # shingle generation WITHOUT the array path: explode the position
+    # sequence and substr in the same whole-stage-codegen span. The
+    # transform(...) char-shingle array is an interpreted HOF and
+    # array_distinct materializes every doc's shingle set — but min()
+    # over duplicate shingles equals min() over distinct ones, so
+    # MinHash needs neither. Hashing every POSITION costs ~1.15x more
+    # md5 calls than hashing distinct shingles, yet measured FASTER
+    # end-to-end (sf0.1 signatures: 3.10s -> 2.81s md5, 2.00s -> 1.80s
+    # xxhash64; bit-identical output). Set semantics (ngram_jaccard)
+    # still use shingles_frame's distinct arrays.
+    from .textstats import normalized_text_col, spread_small_scan
 
-        basedf = spread_small_scan(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__x")),
+    basedf = spread_small_scan(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__x")),
+        "id",
+    ).select("id", normalized_text_col(F.col("__x")).alias("__t"))
+    hashed = (
+        basedf.select(
             "id",
-        ).select("id", normalized_text_col(F.col("__x")).alias("__t"))
-        hashed = (
-            basedf.select(
-                "id",
-                "__t",
-                F.explode(
-                    F.expr(f"sequence(1, greatest(length(__t) - {k - 1}, 1))")
-                ).alias("__i"),
-            )
-            .select("id", F.expr(f"substr(__t, __i, {k})").alias("s"))
-            .select("id", F.expr(base).alias("h"))
+            "__t",
+            F.explode(
+                F.expr(f"sequence(1, greatest(length(__t) - {k - 1}, 1))")
+            ).alias("__i"),
         )
-        mins = [
-            F.min(F.expr(seeded_lit.format(h="h", i=str(i)))).alias(f"__m{i}")
-            for i in range(n_hashes)
-        ]
-        return (
-            hashed.groupBy("id")
-            .agg(*mins)
-            .select(
-                "id",
-                F.array(*[F.col(f"__m{i}") for i in range(n_hashes)]).alias("sig"),
-            )
-        )
-    if strategy != "agg":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    upd = f"zip_with(acc, sequence(0, {n_hashes - 1}), (m, i) -> least(m, {seeded}))"
-    sig = (
-        f"aggregate(transform(array_distinct(__sh), s -> {base}), "
-        f"array_repeat(9223372036854775807L, {n_hashes}), "
-        f"(acc, h) -> {upd})"
+        .select("id", F.expr(f"substr(__t, __i, {k})").alias("s"))
+        .select("id", F.expr(base).alias("h"))
     )
-    return shingles_frame(df, id_col, text_col, k).select(
-        "id", F.expr(sig).alias("sig")
+    mins = [
+        F.min(F.expr(seeded_lit.format(h="h", i=str(i)))).alias(f"__m{i}")
+        for i in range(n_hashes)
+    ]
+    return (
+        hashed.groupBy("id")
+        .agg(*mins)
+        .select(
+            "id",
+            F.array(*[F.col(f"__m{i}") for i in range(n_hashes)]).alias("sig"),
+        )
     )
 
 
@@ -565,75 +537,33 @@ def simhash_signatures(
     text_col: str = "text",
     n_bits: int = 64,
     hash_family: str = "xxhash64",
-    strategy: str = "agg",
 ) -> DataFrame:
     """(id, sig: long) SimHash: per token-hash, vote +1/-1 on each bit; the
     sign of each bit's vote sum is the signature bit.
 
-    ``strategy="agg"`` (default): single-pass SQL ``aggregate`` over the
-    token array — shuffle-free. Interpreted (HOFs never codegen), but
-    MEASURED FASTER here (1.34s vs 1.87s at sf0.1): unlike MinHash, the
-    groupby alternative pays n_bits aggregate-buffer updates per exploded
-    TOKEN row, which outweighs the codegen win. The opposite call from
-    minhash_signatures, made on measurement, not analogy.
-
-    ``strategy="groupby"``: explode tokens -> hash once -> ``groupBy(id)``
-    with n_bits codegen'd conditional-sum vote aggregates + bitwise-OR
-    pack. Docs with no tokens keep a row with sig=0 via a left join back
-    to the id set — identical to the agg form's empty-fold result (and
-    for NULL text, to the DuckDB oracle's coalesce(sig, 0); the agg form
-    yields NULL sig there).
+    Single-pass SQL ``aggregate`` over the token array — shuffle-free.
+    Interpreted (HOFs never codegen), but MEASURED FASTER here (1.34s vs
+    1.87s at sf0.1) than exploding tokens into a ``groupBy(id)`` of
+    codegen'd vote sums: that form pays n_bits aggregate-buffer updates per
+    exploded TOKEN row, which outweighs the codegen win. The opposite call
+    from minhash_signatures, made on measurement, not analogy.
 
     ``hash_family="md5"``: portable 60-bit hash reproducible in DuckDB
     (functions.portable_hash) — use n_bits <= 60 with it; the driver-oracle
     query runs this variant."""
     if hash_family == "xxhash64":
         tok_hash = "xxhash64(t)"
-        tok_hash_col = "xxhash64(tok)"
     elif hash_family == "md5":
         from ..functions.portable_hash import PORTABLE_HASH_SQL
 
         if n_bits > 60:
             raise ValueError("md5 hash family provides 60 bits; lower n_bits")
         tok_hash = PORTABLE_HASH_SQL.format(arg="t")
-        tok_hash_col = PORTABLE_HASH_SQL.format(arg="tok")
     else:
         raise ValueError(f"unknown hash_family {hash_family!r}")
     from .textstats import spread_small_scan
 
     df = spread_small_scan(df.select(id_col, text_col), id_col)
-    if strategy == "groupby":
-        ids = df.select(F.col(id_col).alias("id"), tokens_col(F.col(text_col)).alias("__toks"))
-        hashed = ids.select(
-            "id", F.explode("__toks").alias("tok")
-        ).select("id", F.expr(tok_hash_col).alias("h"))
-        # expr strings, one py4j hop per aggregate / one for the pack (the
-        # Column-op loop cost ~6 eager hops per bit at plan-build time);
-        # parsed trees are identical
-        votes = [
-            F.expr(
-                f"sum(CASE WHEN ((shiftright(h, {i}) & 1) = 1) "
-                f"THEN 1 ELSE -1 END)"
-            ).alias(f"__v{i}")
-            for i in range(n_bits)
-        ]
-        agg = hashed.groupBy("id").agg(*votes)
-        # pack: bit i set iff vote sum positive; NULL votes (no-token docs
-        # after the left join) fall through to 0, reproducing the agg
-        # form's empty-fold signature of 0. shiftleft, not a Python
-        # literal: 1 << 63 overflows a py4j long; Java shiftleft wraps
-        # into the sign bit like the agg form
-        sig = F.expr(
-            "CAST(0 AS BIGINT) | "
-            + " | ".join(
-                f"(CASE WHEN __v{i} > 0 THEN shiftleft(1L, {i}) "
-                f"ELSE CAST(0 AS BIGINT) END)"
-                for i in range(n_bits)
-            )
-        )
-        return ids.select("id").join(agg, "id", "left").select("id", sig.alias("sig"))
-    if strategy != "agg":
-        raise ValueError(f"unknown strategy {strategy!r}")
     votes = (
         f"aggregate(transform(__toks, t -> {tok_hash}), "
         f"array_repeat(0L, {n_bits}), "

@@ -105,7 +105,11 @@ def rolling_anomalies(
     identical sums over the identical ROWS frame; Welford-style stddev
     aggregates would not match across engines). Negative variance from
     float cancellation clamps to 0 (values must span << 1e8 for this form;
-    metric streams do).
+    metric streams do). The window sums are differences of running prefix
+    sums over the key's whole series (see below), so the cancellation
+    error scales with the prefix Σv² up to the row: it grows with series
+    length, not only with the value span — roll long series over fixed
+    time buckets rather than over millions of raw rows per key.
 
     ONE shuffle on the key; both window passes and the output ride it.
     Scale note: rolling semantics are sequential per key, so parallelism =

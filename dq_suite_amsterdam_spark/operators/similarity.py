@@ -85,6 +85,10 @@ def _float_lit_sql(x: float) -> str:
 
 
 def _array_lit_sql(vals: list[float]) -> str:
+    # NaN/Inf have no SQL double literal (repr renders nanD/infD, a
+    # ParseException deep in plan construction): reject them here
+    if not all(math.isfinite(v) for v in vals):
+        raise ValueError("query_vector must contain only finite values (no NaN or +/-Inf)")
     return "array(" + ", ".join(_float_lit_sql(v) for v in vals) + ")"
 
 

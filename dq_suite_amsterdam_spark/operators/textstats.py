@@ -369,14 +369,6 @@ def token_frequencies(
     return vocab
 
 
-def rolling_hash_fingerprint_col(text_col_name: str, k: int = 8) -> Column:
-    """Winnowing-style fingerprint: minimum xxhash64 over k-gram character
-    shingles — robust to local edits. Returns a long."""
-    return F.array_min(
-        F.transform(char_shingles_expr(text_col_name, k), lambda s: F.xxhash64(s))
-    )
-
-
 def add_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """One projection adding all text-analysis columns — a single scan."""
     t = F.col(text_col)

@@ -74,6 +74,40 @@ def test_run_validation_reference_signature(spark, rules_json, tmp_path):
     assert not pathlib.Path(tmp_path / "dq_out2").exists()
 
 
+def test_run_validation_releases_cache_between_runs(spark, rules_json, tmp_path):
+    """Two bool-returning runs over one parquet path that another writer
+    replaces in between (fewer rows, a NULL name): the second run must see
+    the new rows, not frames cached by the first, and the runs leave no
+    cache behind."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dq_suite_amsterdam_spark import compat
+
+    path = tmp_path / "input"
+    path.mkdir()
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()
+
+    def run():
+        return compat.run_validation(
+            json_path=rules_json,
+            df=spark.read.parquet(str(path)),
+            spark_session=spark,
+            catalog_name="dq",
+            table_name="tbl",
+            write_results_to_unity_catalog=False,
+        )
+
+    first = pa.table({"id": list(range(200)), "name": [f"n{i}" for i in range(200)]})
+    pq.write_table(first, str(path / "part-0.parquet"))
+    assert run() is True
+    (path / "part-0.parquet").unlink()
+    pq.write_table(pa.table({"id": [1, 2], "name": ["a", None]}), str(path / "part-1.parquet"))
+    assert run() is False
+    assert persistent().size() == before
+
+
 def test_validate_with_reference_shaped_table_dict(spark):
     from dq_suite_amsterdam_spark import compat
     from dq_suite_amsterdam_spark.common import ValidationSettings

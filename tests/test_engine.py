@@ -154,10 +154,24 @@ def test_distinct_set_rule(spark):
     )  # the reference's 13-row fixture (test_validation.py:54-68)
     good = Rule("ExpectColumnDistinctValuesToEqualSet", {"column": "value", "value_set": [1, 2, 3, 4]})
     bad = Rule("ExpectColumnDistinctValuesToEqualSet", {"column": "value", "value_set": [1, 2, 3]})
-    res = run_validation(spark, df, make_doc([good, bad]), "tbl")
+    # no predicate rules, and a non-observable aggregate (exact distinct
+    # count) ahead of an observable one (mean): results keep suite order
+    uniq = Rule("ExpectColumnUniqueValueCountToBeBetween", {"column": "value", "min_value": 4, "max_value": 4})
+    mean = Rule("ExpectColumnMeanToBeBetween", {"column": "value", "min_value": 3})
+    res = run_validation(spark, df, make_doc([uniq, good, mean, bad]), "tbl")
+    assert [r.compiled.regel_naam for r in res.rule_results] == [
+        "ExpectColumnUniqueValueCountToBeBetween",
+        "ExpectColumnDistinctValuesToEqualSet",
+        "ExpectColumnMeanToBeBetween",
+        "ExpectColumnDistinctValuesToEqualSet",
+    ]
     oks = [r.success for r in res.rule_results]
-    assert oks == [True, False]
-    assert res.rule_results[0].observed_value == [1, 2, 3, 4]
+    assert oks == [True, True, False, False]
+    assert res.rule_results[0].observed_value == 4
+    assert res.rule_results[1].observed_value == [1, 2, 3, 4]
+    assert res.rule_results[2].observed_value == pytest.approx(28 / 13)
+    assert all(r.element_count == 13 for r in res.rule_results)
+    assert res.metrics["input_rows"] == 13
 
 
 def test_pair_rules(spark):

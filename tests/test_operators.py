@@ -118,6 +118,23 @@ def test_cosine_topk(spark, embeddings):
     assert top[0]["cosine"] >= 0.999999
 
 
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+@pytest.mark.parametrize("search", ["cosine_topk", "ann_topk_lsh", "ann_topk_ivf"])
+def test_non_finite_query_vector_rejected(spark, embeddings, tmp_path, search, bad):
+    """A NaN/Inf query entry is a clear ValueError at call time, not a SQL
+    ParseException from the rendered literal."""
+    from dq_suite_amsterdam_spark.operators import similarity
+
+    query = list(embeddings.first()["embedding"])
+    query[1] = bad
+    with pytest.raises(ValueError, match="query_vector"):
+        if search == "ann_topk_ivf":
+            centroids = [[0.0] * len(query)]
+            similarity.ann_topk_ivf(spark, str(tmp_path), query, centroids=centroids)
+        else:
+            getattr(similarity, search)(embeddings, query, k=3)
+
+
 def test_ann_lsh_matches_brute_force_top1(spark, embeddings):
     query = embeddings.filter("vec_id = 3").first()["embedding"]
     ann = ann_topk_lsh(embeddings, query, k=3, n_planes=6).collect()

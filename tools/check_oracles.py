@@ -8,6 +8,7 @@ column names, and an order-insensitive value hash. Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 from pathlib import Path
 
@@ -55,9 +56,12 @@ def main():
     only = set(sys.argv[2:])
     import __spark_entry__ as entrymod
 
+    # one task slot per core this process may run on (the affinity mask,
+    # not the host's core count, which oversubscribes a pinned process)
+    cores = len(os.sched_getaffinity(0))
     spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
+        SparkSession.builder.master(f"local[{cores}]")
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", "8g")
