@@ -848,22 +848,22 @@ def q_neardup_components(spark, sf_dir):
 
 def q_neardup_components_star(spark, sf_dir):
     """Same cluster-size profile as neardup_components, computed by the
-    alternating large-star/small-star edge-rewiring closure instead of
-    label propagation (dedup.py _cc_star, Kiveris et al. SoCC'14) — the
-    adversarial-graph scale variant: per-round joins key on vertex ids,
-    never on the (skewed) component label. Certified against the SAME
-    recursive-CTE transitive-closure oracle, so both closure algorithms
-    are independently proven equal to ground truth."""
+    distributed pointer-jumping closure instead of the driver-local
+    union-find (``local_max_edges=0`` forces the distributed loop at every
+    scale). Certified against the SAME recursive-CTE transitive-closure
+    oracle, so both closure paths are independently proven equal to
+    ground truth."""
     from dq_suite_amsterdam_spark.operators.dedup import (
+        connected_components,
         minhash_lsh_candidates,
-        near_duplicate_components,
     )
 
     df = _t(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = minhash_lsh_candidates(
         df, jaccard_threshold=0.10, n_hashes=16, bands=8, hash_family="md5"
     )
-    return near_duplicate_components(pairs, algorithm="star")
+    comp = connected_components(pairs, local_max_edges=0)
+    return comp.groupBy("component").agg(F.count(F.lit(1)).alias("n_members"))
 
 
 def q_domain_cap(spark, sf_dir):
@@ -3033,7 +3033,8 @@ def oracle_sql() -> dict[str, str]:
                         ORDER BY n_chars DESC, doc_id ASC) <= 5) AS keep
             FROM documents
         """,
-        # the star-closure variant must reproduce the identical profile
+        # the distributed pointer-jumping closure must reproduce the
+        # identical profile
         "neardup_components_star": f"""
             WITH RECURSIVE {_MINHASH_CLOSURE_CTE},
             comp AS (SELECT id, least(id, min(r)) AS component

@@ -195,10 +195,7 @@ def _stage_frame(
       path where signature/shingle frames exceed CacheManager capacity.
       The staged table is the caller's to clean up (it is re-usable input,
       not scratch).
-    - ``"none"``: no staging — each consumer re-runs the producing plan.
     """
-    if cache == "none":
-        return df
     if cache == "persist":
         df = df.persist()
         if persisted_frames is not None:
@@ -208,7 +205,7 @@ def _stage_frame(
         path = cache[len("table:"):]
         df.write.mode("overwrite").parquet(path)
         return df.sparkSession.read.parquet(path)
-    raise ValueError(f'unknown cache mode {cache!r} (persist | none | table:<path>)')
+    raise ValueError(f"unknown cache mode {cache!r} (persist | table:<path>)")
 
 
 def minhash_lsh_candidates(
@@ -221,7 +218,6 @@ def minhash_lsh_candidates(
     jaccard_threshold: float = 0.5,
     max_bucket_size: int = 1000,
     hash_family: str = "xxhash64",
-    persist_signatures: bool = True,
     persisted_frames: list | None = None,
     cache: str | None = None,
 ) -> DataFrame:
@@ -235,15 +231,14 @@ def minhash_lsh_candidates(
 
     Shuffle discipline: the banded/pair shuffles carry only (id, band,
     bucket) — NOT the n_hashes-long signature arrays (x bands duplication);
-    signatures move once per matched side via the keyed join. With
-    ``persist_signatures`` (default) the expensive shingle hashing runs
+    signatures move once per matched side via the keyed join. The
+    signature frame is persisted, so the expensive shingle hashing runs
     exactly once; the cache is (id + n_hashes longs) per doc and lives in
     the session CacheManager until ``spark.catalog.clearCache()`` (Spark
     does not drop DataFrame cache entries on GC). At extreme scale pass
     ``cache="table:<path>"`` to stage signatures as a parquet table
     instead (file-scan leaf, zero CacheManager memory — see
-    ``_stage_frame``); ``cache`` overrides ``persist_signatures`` when
-    set.
+    ``_stage_frame``).
 
     ``hash_family="md5"`` makes the whole pipeline (signatures AND band
     buckets) bit-reproducible in DuckDB for oracle checking.
@@ -256,8 +251,7 @@ def minhash_lsh_candidates(
     # session-lived cache entry by default; callers that run this repeatedly
     # in a long-lived session pass ``persisted_frames`` and unpersist after
     # consuming the result (engine persisted_frames/cleanup pattern)
-    mode = cache if cache else ("persist" if persist_signatures else "none")
-    sig = _stage_frame(sig, mode, persisted_frames)
+    sig = _stage_frame(sig, cache or "persist", persisted_frames)
 
     def band_bucket_sql(b: int) -> str:
         elems = [
@@ -341,8 +335,6 @@ def ngram_jaccard_pairs(
     k: int = 8,
     threshold: float = 0.5,
     max_doc_freq: int | None = 1000,
-    hash_shingles: bool = True,
-    persist_shingles: bool = True,
     persisted_frames: list | None = None,
     cache: str | None = None,
 ) -> DataFrame:
@@ -359,22 +351,20 @@ def ngram_jaccard_pairs(
     1.0 (sizes computed pre-filter would bias the score low whenever a
     document contains a frequent shingle).
 
-    ``hash_shingles`` (default) replaces each shingle string with its
-    xxhash64 in the same projection that explodes it, so the doc-frequency
-    groupBy and the inverted-index self-join shuffle 8-byte longs instead of
-    UTF8 strings. Counts are unchanged unless two distinct shingles collide
-    in 64 bits — negligible below ~2^32 distinct shingles; disable for
-    exact-set semantics beyond that.
+    Each shingle string is replaced by its xxhash64 in the same projection
+    that explodes it, so the doc-frequency groupBy and the inverted-index
+    self-join shuffle 8-byte longs instead of UTF8 strings. Counts are
+    unchanged unless two distinct shingles collide in 64 bits — negligible
+    below ~2^32 distinct shingles.
 
-    ``persist_shingles`` (default): cache the narrow (id, sh) frame at both
-    stages — the plan consumes it five times (doc-freq agg, semi-join
-    input, sizes agg, both self-join sides), so without the cache the
-    expensive normalize+shingle+hash projection re-runs per consumer
-    (measured −46% wall at sf0.1). Session-lived cache entries unless the
-    caller passes ``persisted_frames`` and unpersists after consuming the
-    result; at extreme scale pass ``cache="table:<path>"`` to stage the
-    shingle frame as a parquet table instead (file-scan leaf, zero
-    CacheManager memory); ``cache`` overrides ``persist_shingles``.
+    The narrow (id, sh) frame is persisted at both stages — the plan
+    consumes it five times (doc-freq agg, semi-join input, sizes agg, both
+    self-join sides), so without the cache the expensive
+    normalize+shingle+hash projection re-runs per consumer (measured −46%
+    wall at sf0.1). Session-lived cache entries unless the caller passes
+    ``persisted_frames`` and unpersists after consuming the result; at
+    extreme scale pass ``cache="table:<path>"`` to stage the shingle frame
+    as a parquet table instead (file-scan leaf, zero CacheManager memory).
     """
     shingled = _staged_shingles(
         df,
@@ -382,8 +372,6 @@ def ngram_jaccard_pairs(
         text_col,
         k,
         max_doc_freq,
-        hash_shingles,
-        persist_shingles,
         persisted_frames,
         cache,
     )
@@ -404,8 +392,6 @@ def _staged_shingles(
     text_col: str,
     k: int,
     max_doc_freq: int | None,
-    hash_shingles: bool,
-    persist_shingles: bool,
     persisted_frames: list | None,
     cache: str | None,
 ) -> DataFrame:
@@ -413,14 +399,13 @@ def _staged_shingles(
     scorers: explode distinct shingles, DROP NULL shingles (a NULL-text
     document's shingle array is [NULL]; hashed, that becomes the
     matchable constant xxhash64(NULL) and every NULL-text pair scores
-    1.0 — review-confirmed phantom pairs), optionally hash to longs,
-    stage per ``cache``/``persist_shingles``, and apply the
+    1.0 — review-confirmed phantom pairs), hash to longs, stage per
+    ``cache`` (default ``"persist"``), and apply the
     ``max_doc_freq`` stop-shingle guard. Second-stage staging follows
     the resolved mode: in "table:" mode a persist() here would silently
     re-introduce the CacheManager entry the caller opted out of (the
     post-filter frame is then recomputed per consumer from the staged
     parquet — a narrow scan + semi-join, the cheap part of the plan)."""
-    sh_col = F.xxhash64(F.col("__s")) if hash_shingles else F.col("__s")
     # NULL-text rows are dropped BEFORE shingling: a NULL-text document's
     # shingle array is [NULL] and nothing else (substr of non-NULL text is
     # never NULL), so this one row-level filter is exactly the old
@@ -435,9 +420,9 @@ def _staged_shingles(
     shingled = (
         shingles_frame(base, id_col, text_col, k)
         .select("id", F.explode(F.array_distinct("__sh")).alias("__s"))
-        .select("id", sh_col.alias("sh"))
+        .select("id", F.xxhash64(F.col("__s")).alias("sh"))
     )
-    mode = cache if cache else ("persist" if persist_shingles else "none")
+    mode = cache or "persist"
     shingled = _stage_frame(shingled, mode, persisted_frames)
     if max_doc_freq:
         rare = (
@@ -448,9 +433,7 @@ def _staged_shingles(
         )
         shingled = shingled.join(rare, on="sh", how="left_semi")
         if mode == "persist":
-            shingled = shingled.persist()
-            if persisted_frames is not None:
-                persisted_frames.append(shingled)
+            shingled = _stage_frame(shingled, mode, persisted_frames)
     return shingled
 
 
@@ -479,8 +462,6 @@ def ngram_containment_pairs(
     k: int = 8,
     threshold: float = 0.9,
     max_doc_freq: int | None = 1000,
-    hash_shingles: bool = True,
-    persist_shingles: bool = True,
     persisted_frames: list | None = None,
     cache: str | None = None,
 ) -> DataFrame:
@@ -495,8 +476,8 @@ def ngram_containment_pairs(
 
     Returns (id_a, id_b, containment, sz_a, sz_b) with id_a < id_b,
     containment >= threshold; sizes let the caller see which side is the
-    contained one (the smaller). Same stop-shingle guard, hashing, and
-    staging knobs as the Jaccard scorer; the docs there apply — this is
+    contained one (the smaller). Same stop-shingle guard, shingle hashing
+    and staging as the Jaccard scorer; the docs there apply — this is
     the verify tool behind a blocking family, not a corpus-wide O(n²)
     pass at 100 TB.
     """
@@ -506,8 +487,6 @@ def ngram_containment_pairs(
         text_col,
         k,
         max_doc_freq,
-        hash_shingles,
-        persist_shingles,
         persisted_frames,
         cache,
     )
@@ -662,112 +641,6 @@ class _CheckpointHandle:
             pass
 
 
-def _cc_star(
-    edges_in: DataFrame,
-    max_iterations: int,
-    stats: dict | None,
-) -> tuple[DataFrame, "_CheckpointHandle"]:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    algorithm): each round rewires edges toward per-neighborhood minima
-    until the edge set is a stable star forest (child -> component min).
-
-      large-star: for each u, m = min(N(u) ∪ {u}); emit (v, m) for every
-        neighbor v > u            — tames HIGH-DEGREE vertices: a hub's
-        big neighborhood collapses onto its min in one round
-      small-star: orient edges child=max, for each u, m = min(N⁻(u) ∪ {u});
-        emit (v, m) for v ∈ N⁻(u) ∪ {u}, v ≠ m
-                                  — contracts CHAINS geometrically
-
-    Per round: two groupBy-min + join passes over the EDGE set (vs the
-    label-propagation variant's label table) — only (long, long) pairs
-    shuffle. Convergence = the star edge set reproduces itself, detected
-    with an order-insensitive (count, xor-hash) aggregate instead of a
-    full frame compare. Every round's edge frame is localCheckpoint'd
-    (lineage O(1)); previous blocks released per round."""
-    prev_handle = None
-    edges = (
-        edges_in.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_handle = _CheckpointHandle(edges)
-    converged = False
-    rounds = 0
-    prev_sig = None
-    for _ in range(max_iterations):
-        rounds += 1
-        # large-star over the symmetrized view: m(u) = min(N(u) ∪ {u})
-        sym = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-            edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
-        )
-        m = sym.groupBy("a").agg(F.min("b").alias("__mb")).select(
-            "a", F.least("a", "__mb").alias("m")
-        )
-        large = (
-            sym.join(m, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("m").alias("u"), F.col("b").alias("v"))
-        )
-        # small-star over child=v orientation: m(v) = min(N⁻(v) ∪ {v});
-        # emit (child, m) for every smaller neighbor and v itself
-        sm = large.groupBy("v").agg(F.min("u").alias("__mu")).select(
-            "v", F.least("v", "__mu").alias("m")
-        )
-        small = (
-            large.join(sm, "v")
-            .select(F.col("m").alias("u"), F.col("u").alias("child"))
-            .unionByName(
-                sm.select(F.col("m").alias("u"), F.col("v").alias("child"))
-            )
-            .filter(F.col("u") != F.col("child"))
-            .select("u", F.col("child").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        sig_row = small.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.bit_xor(F.xxhash64(F.col("u"), F.col("v"))), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        sig = (sig_row["n"], sig_row["h"])
-        prev_handle.unpersist()
-        prev_handle = _CheckpointHandle(small)
-        edges = small
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    if stats is not None:
-        stats.update(rounds=rounds, converged=converged, last_changed=-1)
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"connected_components(algorithm='star') exhausted "
-            f"max_iterations={max_iterations} before the star forest "
-            "stabilized — components may be UNDER-MERGED",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    # final star forest: children point at the component min; roots map to
-    # themselves (a root appears only on the u side)
-    children = edges.select(F.col("v").alias("id"), F.col("u").alias("component"))
-    roots = (
-        edges.select(F.col("u").alias("id"))
-        .distinct()
-        .join(children.select(F.col("id")), "id", "left_anti")
-        .select("id", F.col("id").alias("component"))
-    )
-    # prev_handle still owns the final star forest's checkpoint blocks —
-    # the returned plan reads them, so the CALLER decides when to release
-    return children.unionByName(roots), prev_handle
-
-
 # Edge-count ceiling for the driver-local union-find fast path: 10^6
 # (src, dst) longs collect to ~16 MB — far inside driver headroom (the
 # engine's broadcast guards allow bigger) — and close in well under a
@@ -779,9 +652,7 @@ def _cc_star(
 _CC_LOCAL_MAX_EDGES = 1_000_000
 
 
-def _local_components(
-    rows: list, drop_self_loops: bool
-) -> list[tuple] | None:
+def _local_components(rows: list) -> list[tuple] | None:
     """Driver-local union-find over collected (src, dst) rows; returns
     (id, component=min member) tuples, or None when a NULL id is present
     (NULL semantics are left to the distributed path). Python's str/int
@@ -801,10 +672,6 @@ def _local_components(
         a, b = r[0], r[1]
         if a is None or b is None:
             return None
-        if a == b:
-            if not drop_self_loops:
-                parent.setdefault(a, a)
-            continue
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -826,7 +693,6 @@ def connected_components(
     max_iterations: int = 50,
     persisted_frames: list | None = None,
     stats: dict | None = None,
-    algorithm: str = "jump",
     local_max_edges: int | None = None,
 ) -> DataFrame:
     """(id, component) for every id appearing in ``pairs``; ``component``
@@ -875,21 +741,19 @@ def connected_components(
     plan); the DuckDB oracle replays it as a recursive-CTE transitive
     closure, which is exact on test scales.
 
-    ``algorithm="star"`` switches to the alternating large-star/small-star
-    edge-rewiring variant (``_cc_star``) — same (id, component) contract,
-    different scale regime: label propagation's per-round join keys on the
-    LABEL, so once a giant component forms, every one of its vertices
-    carries the same label and the join shuffles a single hot key (salting
-    territory); the star rounds key on VERTEX ids with one-round hub
-    collapse, so degree skew and label skew both stay bounded. Prefer
-    "jump" (default) for the shallow clusters near-dup graphs actually
-    produce; "star" for adversarial graphs — deep chains attached to
-    high-degree hubs, or when one component spans a large corpus fraction.
+    Why pointer jumping is the only distributed loop: an alternating
+    large-star/small-star edge-rewiring loop (Kiveris et al., SoCC'14)
+    was measured against it on a 4-core host with ``local_max_edges=0``,
+    two alternating runs per side, same components out of both. On a
+    10^6-edge giant component (250k-spoke hub + 250k chain + small
+    clusters) star won, 91.7 / 78.1 s in 19 rounds vs 106.6 / 106.3 s in
+    18; on 10^6 edges of shallow clusters jump won, 24.0 / 16.5 s in 1
+    round vs 24.9 / 23.6 s in 2. Near-dup pair graphs are the shallow
+    shape, and every caller's graph so far (sf0.1's minhash pair graph:
+    271,067 edges) closes on the driver-local path anyway.
     """
     import warnings
 
-    if algorithm not in ("jump", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r} (jump | star)")
     if local_max_edges is None:
         local_max_edges = _CC_LOCAL_MAX_EDGES
     # persist the RAW edge list once: `pairs` is usually an EXPENSIVE plan
@@ -906,9 +770,9 @@ def connected_components(
         # scale-adaptive fast path: the measured edge set fits the driver
         # comfortably, so the closure — an O(E α(E)) union-find — runs
         # locally in one pass instead of paying several shuffle+checkpoint
-        # rounds of fixed latency. Identical (id, component) contract per
-        # algorithm (star drops self-loop-only vertices, jump keeps them);
-        # NULL ids fall through to the distributed path.
+        # rounds of fixed latency. Identical (id, component) contract to
+        # the distributed loop (self-loop-only vertices are kept); NULL ids
+        # fall through to the distributed path.
         # Arrow transfer: a few hundred thousand (src, dst) rows arrive as
         # two columnar buffers instead of per-row JVM->pickle Row objects
         # (measurably cheaper at the 10^5-10^6-edge end of this path);
@@ -920,9 +784,7 @@ def connected_components(
             )
         except Exception:  # pragma: no cover - non-Arrow environments
             edge_rows = raw.collect()
-        comps = _local_components(
-            edge_rows, drop_self_loops=(algorithm == "star")
-        )
+        comps = _local_components(edge_rows)
         if comps is not None:
             from pyspark.sql.types import StructField, StructType
 
@@ -934,17 +796,9 @@ def connected_components(
                 [StructField("id", id_type), StructField("component", id_type)]
             )
             return pairs.sparkSession.createDataFrame(comps, schema)
-    sym = raw.unionByName(
+    edges = raw.unionByName(
         raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    if algorithm == "star":
-        out, star_handle = _cc_star(sym, max_iterations, stats)
-        # _cc_star eagerly checkpointed its input: the raw cache is done
-        raw.unpersist()
-        if persisted_frames is not None:
-            persisted_frames.append(star_handle)
-        return out
-    edges = sym
     # initialization folds the FIRST neighbor-min round in for free: with
     # labels starting as own ids, round 1's step-1 is exactly
     # min(id, min neighbor id) — one groupBy instead of a distinct + a
@@ -1142,14 +996,10 @@ def near_duplicate_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     persisted_frames: list | None = None,
-    algorithm: str = "jump",
 ) -> DataFrame:
     """(component, n_members) per connected component of the pair graph —
     the cluster-size profile a dedup run reports (how much of the corpus
     collapses, and whether a degenerate mega-cluster exists). One
-    (component) groupBy over the closure's (id,label) output.
-    ``algorithm`` selects the closure variant (see connected_components)."""
-    comp = connected_components(
-        pairs, id_a, id_b, persisted_frames=persisted_frames, algorithm=algorithm
-    )
+    (component) groupBy over the closure's (id,label) output."""
+    comp = connected_components(pairs, id_a, id_b, persisted_frames=persisted_frames)
     return comp.groupBy("component").agg(F.count(F.lit(1)).alias("n_members"))

@@ -253,7 +253,6 @@ def embedding_near_duplicates(
     seed: int = 42,
     dim: int | None = None,
     n_seeds: int = 1,
-    persist_vectors: bool = True,
     max_bucket_size: int = 2000,
     persisted_frames: list | None = None,
 ) -> DataFrame:
@@ -269,9 +268,9 @@ def embedding_near_duplicates(
     Shuffle discipline (same as MinHash-LSH): the blocking join shuffles
     only (id, seed, bucket) — never the vectors, which would be duplicated
     x n_seeds; vectors join back keyed for the exact-cosine verify, from a
-    cached narrow (id, v) projection when ``persist_vectors`` (session-lived
-    cache entry unless the caller passes ``persisted_frames`` and unpersists
-    after consuming the result — stage to a table at extreme scale instead).
+    persisted narrow (id, v) projection (session-lived cache entry unless
+    the caller passes ``persisted_frames`` and unpersists after consuming
+    the result).
 
     ``max_bucket_size``: degenerate-bucket guard (same stop-bucket semi-join
     as MinHash-LSH). Real embedding spaces are clustered — one hot SRP
@@ -283,11 +282,9 @@ def embedding_near_duplicates(
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
     vec = F.col(vec_col).cast("array<double>")
-    base = df.select(F.col(id_col).alias("id"), vec.alias("v"))
-    if persist_vectors:
-        base = base.persist()
-        if persisted_frames is not None:
-            persisted_frames.append(base)
+    base = df.select(F.col(id_col).alias("id"), vec.alias("v")).persist()
+    if persisted_frames is not None:
+        persisted_frames.append(base)
     bucket_structs = [
         F.struct(
             F.lit(s).alias("s"),

@@ -11,6 +11,8 @@ codegen) — splits, regex counts, array intersections. No Python per row.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -96,14 +98,17 @@ def lang_id_col(text: Column) -> Column:
     return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit(None).cast("string"))
 
 
-#: (session id, canonical-plan hash) -> scan partition count; see
-#: spread_small_scan
-_SPREAD_PROBE_MEMO: dict[tuple[int, int], int] = {}
+#: session -> {canonical-plan hash -> scan partition count}; see
+#: spread_small_scan. Weakly keyed on the session object itself: an
+#: ``id(session)`` key could be reused by a later session after garbage
+#: collection and hand it another session's counts.
+_SPREAD_PROBE_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+#: spread when the plan has at most defaultParallelism / this many partitions
+_SPREAD_FACTOR = 2
 
 
-def spread_small_scan(
-    df: DataFrame, key_col: str | list[str], factor: int = 2
-) -> DataFrame:
+def spread_small_scan(df: DataFrame, key_col: str | list[str]) -> DataFrame:
     """Scale-adaptive parallelism guard for operators whose expensive
     per-row work (shingle hashing, tokenization, signature building) runs
     BEFORE their first exchange: a small/unsplittable input (one tiny
@@ -113,10 +118,10 @@ def spread_small_scan(
     immediately after the read).
 
     If the plan's current partition count is at most ``defaultParallelism
-    / factor``, hash-repartition by ``key_col`` (deterministic — never
-    round-robin, so task retries re-derive the same placement) to spread
-    the work; a downstream groupBy/join on the same key then reuses this
-    exchange, so the net shuffle count is usually unchanged. No-op on
+    / _SPREAD_FACTOR``, hash-repartition by ``key_col`` (deterministic —
+    never round-robin, so task retries re-derive the same placement) to
+    spread the work; a downstream groupBy/join on the same key then reuses
+    this exchange, so the net shuffle count is usually unchanged. No-op on
     healthily-partitioned inputs, so at real scale this never fires.
     Results are partitioning-independent (the callers aggregate or join
     by key afterwards).
@@ -127,26 +132,22 @@ def spread_small_scan(
     Spark's own file-listing cache, never query results. A plan whose
     underlying files change size mid-session may reuse a stale count;
     that only shifts the spread-vs-not decision, never results."""
-    session = df.sparkSession
-    memo_key = None
     try:
-        memo_key = (
-            id(session),
-            df._jdf.queryExecution().analyzed().semanticHash(),  # noqa: SLF001
-        )
-        n = _SPREAD_PROBE_MEMO.get(memo_key)
+        memo = _SPREAD_PROBE_MEMO.setdefault(df.sparkSession, {})
+        plan_hash = df._jdf.queryExecution().analyzed().semanticHash()  # noqa: SLF001
+        n = memo.get(plan_hash)
         if n is None:
             n = df.rdd.getNumPartitions()
-            if len(_SPREAD_PROBE_MEMO) > 4096:  # unbounded-session guard
-                _SPREAD_PROBE_MEMO.clear()
-            _SPREAD_PROBE_MEMO[memo_key] = n
+            if len(memo) > 4096:  # unbounded-session guard
+                memo.clear()
+            memo[plan_hash] = n
     except Exception:  # pragma: no cover - exotic plans; spreading is optional
         try:
             n = df.rdd.getNumPartitions()
         except Exception:
             return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    if n * factor <= target:
+    if n * _SPREAD_FACTOR <= target:
         keys = [key_col] if isinstance(key_col, str) else list(key_col)
         return df.repartition(target, *[F.col(k) for k in keys])
     return df

@@ -11,7 +11,7 @@ from dq_suite_amsterdam_spark.operators.dedup import (
 )
 
 
-def _components(spark, pairs_rows, cap=50, local_max_edges=None):
+def _components(spark, pairs_rows, cap=50, stats=None, local_max_edges=None):
     pairs = spark.createDataFrame(pairs_rows, "id_a long, id_b long")
     frames = []
     try:
@@ -21,6 +21,7 @@ def _components(spark, pairs_rows, cap=50, local_max_edges=None):
                 pairs,
                 max_iterations=cap,
                 persisted_frames=frames,
+                stats=stats,
                 local_max_edges=local_max_edges,
             ).collect()
         }
@@ -313,86 +314,26 @@ def test_dedup_near_duplicates_one_call(spark):
         dedup_near_duplicates(df, method="embedding")
 
 
-# -- large-star/small-star variant -------------------------------------------
+# -- distributed pointer-jumping loop ----------------------------------------
 
 
-def _star_components(spark, pairs_rows, cap=50, stats=None, local_max_edges=None):
-    pairs = spark.createDataFrame(pairs_rows, "id_a long, id_b long")
-    frames = []
-    try:
-        return {
-            r["id"]: r["component"]
-            for r in connected_components(
-                pairs,
-                max_iterations=cap,
-                persisted_frames=frames,
-                stats=stats,
-                algorithm="star",
-                local_max_edges=local_max_edges,
-            ).collect()
-        }
-    finally:
-        for f in frames:
-            f.unpersist()
-
-
-def test_star_matches_jump_on_mixed_graph(spark):
-    import random
-
-    random.seed(11)
-    rows = [(i, i + 1) for i in range(60)]  # 61-vertex path
-    for c in range(10):  # plus random small clusters
-        base = 1000 + c * 40
-        mem = [base + j for j in range(random.randint(2, 7))]
-        rows += [(random.choice(mem), m) for m in mem[1:] if random.choice(mem) != m]
-    rows = [(a, b) for a, b in rows if a != b]
-    assert _star_components(spark, rows) == _components(spark, rows)
-
-
-def test_star_hub_graph_one_round_collapse(spark):
-    # a 200-spoke hub: the high-degree regime the star variant targets —
-    # large-star collapses the whole neighborhood onto the min immediately
+def test_jump_hub_graph_collapse(spark):
+    # a 200-spoke hub: the high-degree shape, forced onto the distributed
+    # loop — the whole neighborhood must land on the hub's min id
     stats = {}
-    comp = _star_components(
+    comp = _components(
         spark, [(100, 1000 + i) for i in range(200)], stats=stats,
         local_max_edges=0,
     )
     assert set(comp.values()) == {100}
     assert len(comp) == 201
-    assert stats["converged"] and stats["rounds"] <= 3
+    assert stats["converged"]
 
 
-def test_star_deep_path_logarithmic_rounds(spark):
-    # 300-vertex path, diameter 299: star must converge in O(log^2) rounds,
-    # far under the 25-round budget (neighbor-min alone would need ~299)
-    stats = {}
-    comp = _star_components(
-        spark, [(i, i + 1) for i in range(299)], cap=25, stats=stats,
-        local_max_edges=0,
-    )
-    assert set(comp.values()) == {0} and len(comp) == 300
-    assert stats["converged"] and stats["rounds"] <= 20
-
-
-def test_star_unconverged_warns(spark):
-    import warnings
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(64)], "id_a long, id_b long"
-    )
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        connected_components(
-            pairs, max_iterations=1, algorithm="star", local_max_edges=0
-        ).collect()
-    assert any("UNDER-MERGED" in str(x.message) for x in w)
-
-
-def test_star_empty_and_bad_algorithm(spark):
+def test_jump_empty_pairs(spark):
     pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components(pairs, algorithm="star").count() == 0
-    with pytest.raises(ValueError):
-        connected_components(pairs, algorithm="nope")
+    out = connected_components(pairs, local_max_edges=0)
+    assert out.count() == 0 and out.columns == ["id", "component"]
 
 
 # -- driver-local fast path ---------------------------------------------------
@@ -411,11 +352,6 @@ def test_local_fast_path_matches_distributed(spark):
     dist = _components(spark, rows_with_self, local_max_edges=0)
     assert local == dist
     assert local[999] == 999  # jump keeps self-loop-only vertices
-    # star: identical output local vs distributed (drops self-loop-only)
-    slocal = _star_components(spark, rows_with_self)
-    sdist = _star_components(spark, rows_with_self, local_max_edges=0)
-    assert slocal == sdist
-    assert 999 not in slocal
 
 
 def test_local_fast_path_stats_and_empty(spark):

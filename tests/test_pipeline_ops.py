@@ -1333,3 +1333,26 @@ def test_spread_probe_memo_consistent(spark):
     target = spark.sparkContext.defaultParallelism
     wide = spark.range(0, 1000, 1, target)
     assert ts.spread_small_scan(wide.selectExpr("id", "'x' as text"), "id") is not None
+
+
+def test_spread_probe_memo_drops_collected_session(spark):
+    """A garbage-collected session leaves no probe-memo entry behind, so a
+    later session that happens to get the same id() can never inherit its
+    partition counts."""
+    import gc
+
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    from dq_suite_amsterdam_spark.operators import textstats as ts
+
+    gc.collect()
+    before = len(ts._SPREAD_PROBE_MEMO)
+    other = spark.newSession()
+    ts.spread_small_scan(other.range(0, 100, 1, 1), "id")
+    assert len(ts._SPREAD_PROBE_MEMO) == before + 1
+    # newSession() re-points RDD.toDF at the new session; point it back so
+    # the test's own name is the last reference to ``other``
+    _monkey_patch_RDD(spark)
+    del other
+    gc.collect()
+    assert len(ts._SPREAD_PROBE_MEMO) == before

@@ -1,6 +1,8 @@
 """Local replica of the driver's correctness gate: run each queries() entry
 on Spark and its oracle_sql() on DuckDB at a given sf dir, compare row count,
-column names, and an order-insensitive value hash. Usage:
+column names, and an order-insensitive value hash. Each status line also
+carries the Spark side's wall-seconds: query build (which runs any eager
+jobs, e.g. closure rounds) plus collect. Usage:
 
     python tools/check_oracles.py [sf_dir] [query ...]
 """
@@ -10,6 +12,7 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -78,11 +81,16 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         sdf = fn(spark, sf_dir)
         scols = sdf.columns
         srows = [tuple(r) for r in sdf.collect()]
+        spark_s = time.perf_counter() - t0
         if name not in oracles:
-            print(f"{name:32s} rows-only: {len(srows)} rows, cols={scols}")
+            print(
+                f"{name:32s} rows-only: {len(srows)} rows, cols={scols} "
+                f"spark={spark_s:.2f}s"
+            )
             continue
         ddf = con.sql(oracles[name])
         dcols = [c[0] for c in ddf.description]
@@ -102,7 +110,8 @@ def main():
             failures += 1
         print(
             f"{name:32s} {status} rows={len(srows)}/{len(drows)} "
-            f"cols_match={ok_cols} hash={'=' if ok_hash else f'{h_s}!={h_d}'}"
+            f"cols_match={ok_cols} hash={'=' if ok_hash else f'{h_s}!={h_d}'} "
+            f"spark={spark_s:.2f}s"
         )
         if status == "FAIL" and (not ok_cols or not ok_hash):
             print(f"    spark cols: {scols}\n    duck  cols: {dcols}")
