@@ -18,31 +18,24 @@ Bucketing keeps the driver loop O(n_buckets) (16-64), never O(#repos):
 giant monorepos are *split across* buckets only by (repo, lang) pairs, and
 skew inside a bucket is handled by AQE + map-side partial aggregation.
 
-Read amplification (``bucket_strategy``): a naive per-bucket filter of
+Read amplification: a naive per-bucket filter of
 ``pmod(xxhash64(partition_cols), n) == bucket`` is opaque to every storage
 format — each of the n bucket iterations would re-scan the FULL input
-(n x read amplification on the very feature meant to save work). Instead:
+(n x read amplification on the very feature meant to save work). Instead,
+ONE tiny column-pruned distinct scan of the partition columns assigns each
+distinct value tuple to a bucket; each bucket's filter is then expressed on
+the partition columns themselves (per-column IN-lists for parquet min/max +
+Hive partition pruning, plus an exact IN on the tuple key — an expression
+over partition columns, which Spark's FileSourceStrategy evaluates against
+the partition spec at planning time). On a (repo, lang)-partitioned table
+the n bucket reads together touch each file exactly once ~= 1 input scan
+total. Buckets with no keys short-circuit to an empty local relation (zero
+jobs).
 
-- ``"values"`` (default): ONE tiny column-pruned distinct scan of the
-  partition columns assigns each distinct value tuple to a bucket; each
-  bucket's filter is then expressed on the partition columns themselves
-  (per-column IN-lists for parquet min/max + Hive partition pruning, plus
-  an exact IN on the tuple key — an expression over partition columns,
-  which Spark's FileSourceStrategy evaluates against the partition spec at
-  planning time). On a (repo, lang)-partitioned table the n bucket reads
-  together touch each file exactly once ~= 1 input scan total. Buckets
-  with no keys short-circuit to an empty local relation (zero jobs).
-- ``"stage"``: one pass materializes a ``partitionBy(bucket)`` copy at
-  ``stage_path`` (skipped on resume if the staged copy already exists);
-  bucket reads are then partition-pruned by construction — for inputs
-  that are NOT laid out by the partition columns. Total IO = 1 read +
-  1 write + 1 read regardless of n_buckets.
-- ``"hash"``: the naive filter, kept for inputs where a distinct scan is
-  impossible and staging is unwanted.
-
-``"values"`` falls back to ``"stage"`` (if ``stage_path`` given) or
-``"hash"`` when the partition columns have more than ``max_distinct_keys``
-distinct tuples (driver IN-lists must stay plan-sized).
+When the partition columns have more than ``MAX_BUCKET_KEYS`` distinct
+tuples the driver IN-lists would no longer be plan-sized, and the loop falls
+back to the hash filter: still correct, at the cost of one input scan per
+bucket.
 """
 
 from __future__ import annotations
@@ -60,6 +53,10 @@ from . import fsio
 from .common import DataQualityRulesDict, ValidationSettings
 from .engine import ValidationEngine, rule_set_hash
 from .schemas import LEDGER_SCHEMA
+
+#: most distinct partition-column tuples expressed as bucket IN-lists; above
+#: it the bucket loop falls back to the hash filter
+MAX_BUCKET_KEYS = 200_000
 
 
 class RunLedger:
@@ -102,9 +99,9 @@ class RunLedger:
         tables under the same run_id without the second table's buckets being
         silently skipped. ``input_snapshot`` likewise: a run resumed after
         the input data was replaced must NOT skip buckets validated against
-        the old snapshot — mixed-snapshot results with no warning are the
-        same hazard the staging sidecar closes. ``None`` matches any
-        (legacy records / callers that don't version their input)."""
+        the old snapshot (mixed-snapshot results with no warning).
+        ``None`` matches any (legacy records / callers that don't version
+        their input)."""
         done = set()
         for line in self._read_lines():
             if not line.strip():
@@ -162,14 +159,13 @@ def value_bucket_predicates(
     df: DataFrame,
     partition_columns: list[str],
     n_buckets: int,
-    max_distinct_keys: int = 200_000,
 ) -> list | None:
     """Per-bucket filters expressed on the partition COLUMNS (prunable),
     derived from one column-pruned distinct scan.
 
     Returns a list of length ``n_buckets``: a Column predicate per bucket,
     or ``None`` for a provably-empty bucket. Returns ``None`` (overall) when
-    the distinct tuple count exceeds ``max_distinct_keys``.
+    the distinct tuple count exceeds ``MAX_BUCKET_KEYS``.
 
     Each bucket predicate is (tuple-key IN-list) AND (bucket-hash == b)
     AND (per-column IN-list per partition column). The per-column lists
@@ -189,10 +185,10 @@ def value_bucket_predicates(
             key.alias("__key"),
             _bucket_expr(partition_columns, n_buckets).alias("__bucket"),
         )
-        .limit(max_distinct_keys + 1)
+        .limit(MAX_BUCKET_KEYS + 1)
         .collect()
     )
-    if len(rows) > max_distinct_keys:
+    if len(rows) > MAX_BUCKET_KEYS:
         return None
     keys_by_bucket: dict[int, list[str]] = {}
     vals_by_bucket: dict[int, dict[str, set]] = {}
@@ -226,52 +222,6 @@ def value_bucket_predicates(
     return preds
 
 
-def stage_bucketed_copy(
-    spark: SparkSession,
-    df: DataFrame,
-    partition_columns: list[str],
-    n_buckets: int,
-    stage_path: str,
-    fmt: str = "parquet",
-    input_snapshot: str = "",
-) -> DataFrame:
-    """Materialize a ``partitionBy(__dq_bucket)`` copy of ``df`` in ONE
-    pass; per-bucket reads of the result are partition-pruned by
-    construction. Skipped (reused) when a staged copy already exists AND
-    its sidecar metadata (``_dq_stage_meta.json``: n_buckets, partition
-    columns, input snapshot) matches this call — a resumed run must not
-    pay the staging pass again, but a stale copy staged with different
-    bucketing (or from an older input snapshot) would make the bucket
-    loop silently skip rows in buckets >= the old n_buckets, so any
-    mismatch re-stages."""
-    meta = {
-        "n_buckets": n_buckets,
-        "partition_columns": list(partition_columns),
-        "input_snapshot": input_snapshot,
-    }
-    success_marker = fsio.join_path(stage_path, "_SUCCESS")
-    meta_path = fsio.join_path(stage_path, "_dq_stage_meta.json")
-    reusable = False
-    if fsio.exists(success_marker, spark):
-        existing = fsio.read_text(meta_path, spark)
-        try:
-            reusable = existing is not None and json.loads(existing) == meta
-        except ValueError:
-            reusable = False
-    if not reusable:
-        (
-            df.withColumn("__dq_bucket", _bucket_expr(partition_columns, n_buckets))
-            .write.mode("overwrite")
-            .partitionBy("__dq_bucket")
-            .format(fmt)
-            .save(stage_path)
-        )
-        # written AFTER the data + _SUCCESS: a crash between the two leaves
-        # no meta file, which reads as "mismatch" and re-stages — safe
-        fsio.write_text(meta_path, json.dumps(meta, sort_keys=True), spark)
-    return spark.read.format(fmt).load(stage_path)
-
-
 def run_partitioned_validation(
     spark: SparkSession,
     df: DataFrame,
@@ -285,15 +235,12 @@ def run_partitioned_validation(
     input_snapshot: str = "",
     ref_tables: dict[str, DataFrame] | None = None,
     baseline_store: Any = None,
-    bucket_strategy: str = "values",
-    stage_path: str | None = None,
-    max_distinct_keys: int = 200_000,
 ) -> list[dict]:
     """Validate bucket-by-bucket with resume. Returns the ledger records
     written this call (one per processed bucket). See the module docstring
-    for ``bucket_strategy`` (read-amplification design)."""
-    if bucket_strategy not in ("values", "stage", "hash"):
-        raise ValueError(f"unknown bucket_strategy {bucket_strategy!r}")
+    for the bucket filters (read-amplification design)."""
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets!r}")
     partition_columns = partition_columns or settings.partition_columns or ["repo", "lang"]
     rd = rules_doc.table(table_name)
     missing = [c for c in partition_columns if c not in df.columns]
@@ -326,26 +273,9 @@ def run_partitioned_validation(
         run_id, rs_hash, table_id, input_snapshot=input_snapshot
     )
 
-    strategy = bucket_strategy
     bucket_preds: list | None = None
-    staged: DataFrame | None = None
-    if strategy == "values" and len(done) < n_buckets:
-        bucket_preds = value_bucket_predicates(
-            df, partition_columns, n_buckets, max_distinct_keys
-        )
-        if bucket_preds is None:  # too many distinct tuples for IN-lists
-            strategy = "stage" if stage_path else "hash"
-    if strategy == "stage" and len(done) < n_buckets:
-        if not stage_path:
-            raise ValueError("bucket_strategy='stage' requires stage_path")
-        staged = stage_bucketed_copy(
-            spark,
-            df,
-            partition_columns,
-            n_buckets,
-            stage_path,
-            input_snapshot=input_snapshot,
-        )
+    if len(done) < n_buckets:
+        bucket_preds = value_bucket_predicates(df, partition_columns, n_buckets)
     hash_bucket_col = _bucket_expr(partition_columns, n_buckets)
     written: list[dict] = []
     if settings.write_results and settings.output_path and len(done) < n_buckets:
@@ -371,15 +301,14 @@ def run_partitioned_validation(
         if bucket in done:
             continue
         t0 = time.monotonic()
-        if strategy == "values":
-            pred = bucket_preds[bucket]
+        if bucket_preds is None:  # too many distinct tuples for IN-lists
+            part_df = df.filter(hash_bucket_col == bucket)
+        elif bucket_preds[bucket] is None:
             # provably-empty bucket: a constant-false filter collapses to an
             # empty LocalRelation (PruneFilters) — no scan, no Spark job
-            part_df = df.filter(F.lit(False)) if pred is None else df.filter(pred)
-        elif strategy == "stage":
-            part_df = staged.filter(F.col("__dq_bucket") == bucket).drop("__dq_bucket")
+            part_df = df.filter(F.lit(False))
         else:
-            part_df = df.filter(hash_bucket_col == bucket)
+            part_df = df.filter(bucket_preds[bucket])
         result = engine.run(part_df)
         if settings.write_results and settings.output_path:
             # dynamic partition OVERWRITE, not append: a re-run of a bucket

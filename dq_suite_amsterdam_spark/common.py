@@ -170,6 +170,10 @@ class ValidationSettings:
     def __post_init__(self) -> None:
         _require(self.violation_mode in ("row", "grouped"), "violation_mode must be 'row' or 'grouped'")
         _require(
+            self.violation_limit is None or self.violation_limit >= 1,
+            f"violation_limit must be None or >= 1, got {self.violation_limit!r}",
+        )
+        _require(
             self.notify_on in ("all", "failure", "success"),
             "notify_on must be one of ('all', 'failure', 'success')",
         )

@@ -44,7 +44,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -141,11 +141,7 @@ class ValidationRunResult:
     def cleanup(self) -> None:
         """Unpersist intermediate frames once the result frames have been
         consumed (call per run in long-lived processes / bucket loops)."""
-        for frame in self.persisted_frames:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass
+        _unpersist_all(self.persisted_frames)
         self.persisted_frames = []
 
 
@@ -162,15 +158,17 @@ def _ids_repr_col(df: DataFrame, id_cols: list[str]):
     """``[[id1, id2]]`` — Python-repr of a 1-element list of the grouped id
     list, matching the reference's unexpected_rows identifier shape
     (output_transformations.py:596-600)."""
-    inner = _ids_inner_col(df, id_cols)
+    reprs = [python_repr_column(F.col(c), df.schema[c].dataType) for c in id_cols]
+    inner = F.concat(F.lit("["), F.concat_ws(", ", *reprs), F.lit("]"))
     return F.concat(F.lit("["), inner, F.lit("]"))
 
 
-def _ids_inner_col(df: DataFrame, id_cols: list[str]):
-    """``[id1, id2]`` — repr of one grouped id list."""
-    reprs = [python_repr_column(F.col(c), df.schema[c].dataType) for c in id_cols]
-    body = F.concat_ws(", ", *reprs)
-    return F.concat(F.lit("["), body, F.lit("]"))
+def _unpersist_all(frames: list[DataFrame]) -> None:
+    for frame in frames:
+        try:
+            frame.unpersist()
+        except Exception:
+            pass
 
 
 def _masked_value_col(cr: CompiledRule, mask_columns: list[str] | None):
@@ -182,6 +180,49 @@ def _masked_value_col(cr: CompiledRule, mask_columns: list[str] | None):
         if any(str(a) in mask_columns for a in attrs if a is not None):
             return F.lit(MASKED)
     return cr.value_col
+
+
+def _salted_cap(
+    frame: DataFrame, keys: list[str], order, limit: int, n_rows_hint: int | None
+) -> DataFrame:
+    """Keep the first ``limit`` rows per ``keys`` group in ``order``.
+
+    Two-stage exact cap: a single window partitioned only by the group keys
+    would shuffle EVERY violation row to <= #groups reducers (hot keys at
+    scale). Stage 1 caps each of S salt buckets per group at ``limit``
+    (balanced shuffle), leaving <= S*limit rows per group for the exact
+    stage-2 window. When ``n_rows_hint`` shows the frame is small, stage 1
+    is skipped — one window is enough and one shuffle cheaper."""
+    n_salt = 16
+    if n_rows_hint is None or n_rows_hint > n_salt * limit:
+        salt = F.pmod(
+            F.xxhash64(F.coalesce(F.col("identifierVeldWaarde"), F.lit(""))),
+            F.lit(n_salt),
+        )
+        w1 = Window.partitionBy(*keys, salt).orderBy(order)
+        frame = (
+            frame.withColumn("__rn", F.row_number().over(w1))
+            .filter(F.col("__rn") <= limit)
+            .drop("__rn")
+        )
+    w2 = Window.partitionBy(*keys).orderBy(order)
+    return (
+        frame.withColumn("__rn", F.row_number().over(w2))
+        .filter(F.col("__rn") <= limit)
+        .drop("__rn")
+    )
+
+
+def _key_rule_result(cr: CompiledRule, unexpected: int, total_rows: int) -> RuleResult:
+    """validatie result of a uniqueness or referential rule."""
+    percent = (unexpected / total_rows * 100.0) if total_rows else None
+    return RuleResult(
+        compiled=cr,
+        success=unexpected == 0,
+        element_count=total_rows,
+        unexpected_count=unexpected,
+        unexpected_percent=percent,
+    )
 
 
 class ValidationEngine:
@@ -220,6 +261,22 @@ class ValidationEngine:
     # -- public ------------------------------------------------------------
 
     def run(self, df: DataFrame) -> ValidationRunResult:
+        # run-scoped persist registry, passed EXPLICITLY down the call chain
+        # (never stashed on the instance: two concurrent run() calls on one
+        # engine must not cross-register frames into each other's cleanup
+        # lists); list.append is GIL-atomic, so pool-thread helpers may
+        # append concurrently. A failed run releases what it registered —
+        # a leaked frame would serve a later run of the same plan stale rows.
+        persisted_frames: list[DataFrame] = []
+        try:
+            return self._run(df, persisted_frames)
+        except BaseException:
+            _unpersist_all(persisted_frames)
+            raise
+
+    def _run(
+        self, df: DataFrame, persisted_frames: list[DataFrame]
+    ) -> ValidationRunResult:
         t0 = time.monotonic()
         rd: RulesDict = self.rules_doc.table(self.settings.table_name)
         table_id = self.rules_doc.table_id(rd.table_name)
@@ -256,12 +313,6 @@ class ValidationEngine:
         distinct_rules = [c for c in observed_rules if not c.observable]
 
         n_violation_rows = None
-        # run-scoped persist registry, passed EXPLICITLY down the call chain
-        # (never stashed on the instance: two concurrent run() calls on one
-        # engine must not cross-register frames into each other's cleanup
-        # lists); list.append is GIL-atomic, so pool-thread helpers may
-        # append concurrently
-        persisted_frames: list[DataFrame] = []
         drift_fut = None
         phase_t: dict[str, float] = {"compile": time.monotonic() - t0}
         drift_rules = by_kind.get("drift", [])
@@ -304,33 +355,23 @@ class ValidationEngine:
             # uniqueness/referential need total_rows only for percentages —
             # the full jobs (aggregation AND shaped violation frames) run on
             # pool threads, overlapping the fused scan; totals fill in after
-            uniq_futs = [
+            key_futs = [
                 (
-                    cr,
-                    pool.submit(
-                        self._dup_key_stats,
-                        df,
-                        cr,
-                        id_cols,
-                        rd.mask_columns,
-                        persisted_frames,
-                    ),
+                    phase,
+                    [
+                        (
+                            cr,
+                            pool.submit(
+                                key_pass, df, cr, id_cols, rd.mask_columns, persisted_frames
+                            ),
+                        )
+                        for cr in by_kind.get(kind, [])
+                    ],
                 )
-                for cr in by_kind.get("groupby_unique", [])
-            ]
-            ref_futs = [
-                (
-                    cr,
-                    pool.submit(
-                        self._referential_violation_count,
-                        df,
-                        cr,
-                        id_cols,
-                        rd.mask_columns,
-                        persisted_frames,
-                    ),
+                for phase, kind, key_pass in (
+                    ("uniq_wait", "groupby_unique", self._dup_key_stats),
+                    ("ref_wait", "referential", self._referential_violation_count),
                 )
-                for cr in by_kind.get("referential", [])
             ]
             if drift_rules:
                 from .drift import run_drift_rules
@@ -416,28 +457,14 @@ class ValidationEngine:
             by_rule = {id(r.compiled): r for r in stat_results}
             order = observable_rules + distinct_rules if predicate_rules else observed_rules
             results += [by_rule[id(c)] for c in predicate_rules + order]
-            _t = time.monotonic()
-            for cr, fut in uniq_futs:
-                dup_stats = fut.result()
-                persisted_frames.append(dup_stats[0])
-                if dup_stats[3] is not None:
-                    persisted_frames.append(dup_stats[3])
-                res, viol = self._finish_uniqueness(cr, dup_stats, total_rows)
-                results.append(res)
-                if viol is not None:
-                    violation_frames.append(viol)
-            phase_t["uniq_wait"] = time.monotonic() - _t
-            _t = time.monotonic()
-            for cr, fut in ref_futs:
-                ref_stats = fut.result()
-                if ref_stats[1] is not None:
-                    persisted_frames.append(ref_stats[1])
-                persisted_frames.append(ref_stats[2])  # the counted ref keys
-                res, viol = self._finish_referential(cr, ref_stats, total_rows)
-                results.append(res)
-                if viol is not None:
-                    violation_frames.append(viol)
-            phase_t["ref_wait"] = time.monotonic() - _t
+            for phase, futs in key_futs:
+                _t = time.monotonic()
+                for cr, fut in futs:
+                    unexpected, shaped = fut.result()
+                    results.append(_key_rule_result(cr, unexpected, total_rows))
+                    if shaped is not None:
+                        violation_frames.append(shaped)
+                phase_t[phase] = time.monotonic() - _t
             if drift_fut is not None:
                 _t = time.monotonic()
                 results += drift_fut.result()
@@ -669,8 +696,8 @@ class ValidationEngine:
     def _apply_violation_shape(
         self,
         viol: DataFrame,
-        n_rows_hint: int | None = None,
-        persisted_frames: list | None = None,
+        n_rows_hint: int | None,
+        persisted_frames: list[DataFrame],
     ) -> DataFrame:
         """Apply violation_mode + per-rule limit. 'row' keeps one output row
         per violating source row (bounded by violation_limit via a window
@@ -679,9 +706,7 @@ class ValidationEngine:
         collected, computed distributively.
 
         ``n_rows_hint``: known total size of ``viol`` (fused mode counts it;
-        uniqueness knows its unexpected count). When the frame is small the
-        salting stage is skipped — one window is enough and one shuffle
-        cheaper; the two-stage path remains for unbounded violation sets."""
+        key rules know their unexpected count), see _salted_cap."""
         settings = self.settings
         if settings.violation_mode == "grouped":
             # BOUNDED state: ids are capped per (regelId, value) BEFORE
@@ -695,8 +720,6 @@ class ValidationEngine:
             # result) and groups that overflow get an explicit
             # ', ...(+N more)' marker instead of the reference's silent
             # 200-id cliff (README.md:144).
-            from pyspark.sql import Window
-
             limit = settings.violation_limit or GROUPED_DEFAULT_LIMIT
             # struct-wrapped value: null deviating values (e.g. every
             # not-null violation) must group AND join null-safely
@@ -710,31 +733,14 @@ class ValidationEngine:
             # would be computed twice per rule set. Persist it unless the
             # input is already cached (the fused path persists `viol`
             # upstream; a second cache of the same rows buys nothing),
-            # registering with the run's cleanup list when available.
+            # registering with the run's cleanup list.
             if viol.storageLevel == StorageLevel.NONE:
                 viol_k = viol_k.persist()
-                if persisted_frames is not None:
-                    persisted_frames.append(viol_k)
+                persisted_frames.append(viol_k)
             keys = ["regelId", "__gv"]
             counts = viol_k.groupBy(*keys).agg(F.count(F.lit(1)).alias("__total"))
-            capped = viol_k
-            n_salt = 16
-            if n_rows_hint is None or n_rows_hint > n_salt * limit:
-                salt = F.pmod(
-                    F.xxhash64(F.coalesce(F.col("identifierVeldWaarde"), F.lit(""))),
-                    F.lit(n_salt),
-                )
-                w1 = Window.partitionBy(*keys, salt).orderBy("identifierVeldWaarde")
-                capped = (
-                    viol_k.withColumn("__rn", F.row_number().over(w1))
-                    .filter(F.col("__rn") <= limit)
-                    .drop("__rn")
-                )
-            w2 = Window.partitionBy(*keys).orderBy("identifierVeldWaarde")
-            capped = (
-                capped.withColumn("__rn", F.row_number().over(w2))
-                .filter(F.col("__rn") <= limit)
-                .drop("__rn")
+            capped = _salted_cap(
+                viol_k, keys, "identifierVeldWaarde", limit, n_rows_hint
             )
             grouped = capped.groupBy(*keys).agg(
                 F.array_sort(F.collect_list("identifierVeldWaarde")).alias("__ids")
@@ -760,36 +766,55 @@ class ValidationEngine:
                 ),
             )
         if settings.violation_limit:
-            from pyspark.sql import Window
-
-            # two-stage exact limit: a single window partitioned only by
-            # regelId would shuffle EVERY violation row to <= #rules
-            # reducers (hot keys at scale). Stage 1 caps each of S salt
-            # buckets per rule at `limit` (balanced shuffle), leaving
-            # <= S*limit rows per rule for the exact stage-2 window.
-            limit = settings.violation_limit
-            n_salt = 16
-            capped = viol
-            if n_rows_hint is None or n_rows_hint > n_salt * limit:
-                salt = F.pmod(
-                    F.xxhash64(F.coalesce(F.col("identifierVeldWaarde"), F.lit(""))),
-                    F.lit(n_salt),
-                )
-                w1 = Window.partitionBy("regelId", salt).orderBy(F.lit(1))
-                capped = (
-                    viol.withColumn("__rn", F.row_number().over(w1))
-                    .filter(F.col("__rn") <= limit)
-                    .drop("__rn")
-                )
-            w2 = Window.partitionBy("regelId").orderBy(F.lit(1))
-            return (
-                capped.withColumn("__rn", F.row_number().over(w2))
-                .filter(F.col("__rn") <= limit)
-                .drop("__rn")
+            return _salted_cap(
+                viol, ["regelId"], F.lit(1), settings.violation_limit, n_rows_hint
             )
         return viol
 
-    # -- pass 3: uniqueness ---------------------------------------------------------
+    # -- passes 3+4: key rules (uniqueness, referential) ----------------------------
+
+    def _key_violations(
+        self,
+        viol_rows: DataFrame,
+        cr: CompiledRule,
+        keys: list[str],
+        id_cols: list[str],
+        mask_columns: list[str] | None,
+        unexpected: int,
+        persisted_frames: list[DataFrame],
+    ) -> DataFrame:
+        """Shaped afwijking rows of a key rule over its violating source
+        rows (a semi/anti-join of the input: same columns). Deviating
+        value: str(tuple of (col, value) pairs) for compound keys
+        (reference str(tuple(dict.items()))); plain value else.
+
+        LAZY on purpose: materializing here (persist+count) contends with
+        the fused scan for cores and extends the critical path (measured
+        +11s at 32c/16M); at consumption the key-pruned re-scan runs on an
+        otherwise idle cluster."""
+        if len(keys) == 1:
+            k = keys[0]
+            if mask_columns and k in mask_columns:
+                value_col = F.lit(MASKED)
+            else:
+                value_col = F.col(k).cast("string")
+        else:
+            parts = []
+            for k in keys:
+                val_repr = (
+                    F.lit(f"'{MASKED}'")
+                    if (mask_columns and k in mask_columns)
+                    else python_repr_column(F.col(k), viol_rows.schema[k].dataType)
+                )
+                parts.append(F.concat(F.lit(f"('{k}', "), val_repr, F.lit(")")))
+            value_col = F.concat(F.lit("("), F.concat_ws(", ", *parts), F.lit(")"))
+        viol = viol_rows.select(
+            F.lit(cr.regel_id).alias("regelId"),
+            _ids_repr_col(viol_rows, id_cols).alias("identifierVeldWaarde"),
+            value_col.alias("afwijkendeAttribuutWaarde"),
+            *self._carry_cols(viol_rows),
+        )
+        return self._apply_violation_shape(viol, unexpected, persisted_frames)
 
     def _dup_key_stats(
         self,
@@ -797,17 +822,14 @@ class ValidationEngine:
         cr: CompiledRule,
         id_cols: list[str],
         mask_columns: list[str] | None,
-        persisted_frames: list | None = None,
-    ):
+        persisted_frames: list[DataFrame],
+    ) -> tuple[int, DataFrame | None]:
         """FULL uniqueness work, run on a pool thread so it overlaps the
         fused scan: duplicate-key detection via
         ``groupBy(keys).count().filter(>1)`` (map-side partial counts — hot
         keys shuffle one row per input partition, skew-safe; AQE coalesces
-        the reduce side), then — when duplicates exist — the violation frame
-        (key-pruned semi-join back to the input), shaped, persisted and
-        materialized HERE. Building it lazily instead would re-scan the
-        input during downstream afwijking consumption, serializing ~seconds
-        of pruned scans after all parallel work has finished."""
+        the reduce side), then — when duplicates exist — the shaped
+        violation frame over the key-pruned semi-join back to the input."""
         keys = cr.key_cols
         # explicit projection before the shuffle: guarantees only the key
         # columns are scanned/shuffled even when the input is cached or the
@@ -818,72 +840,23 @@ class ValidationEngine:
             .agg(F.count(F.lit(1)).alias("__cnt"))
             .filter(F.col("__cnt") > 1)
         ).persist()
+        persisted_frames.append(dup_keys)
         stats = dup_keys.agg(
             F.coalesce(F.sum("__cnt"), F.lit(0)).alias("rows"),
             F.count(F.lit(1)).alias("groups"),
         ).collect()[0]
-        unexpected, n_groups = int(stats["rows"]), int(stats["groups"])
-        shaped = None
-        if unexpected:
-            # violations: rows participating in duplicate groups. The
-            # duplicate key set is usually tiny -> broadcast the semi-join.
-            join_side = dup_keys.select(*keys)
-            if n_groups <= 1_000_000:
-                join_side = F.broadcast(join_side)
-            viol_rows = df.join(join_side, on=keys, how="left_semi")
-
-            # deviating value: str(tuple of (col, value) pairs) for compound
-            # keys (reference str(tuple(dict.items()))); plain value else.
-            if len(keys) == 1:
-                k = keys[0]
-                if mask_columns and k in mask_columns:
-                    value_col = F.lit(MASKED)
-                else:
-                    value_col = F.col(k).cast("string")
-            else:
-                parts = []
-                for k in keys:
-                    val_repr = (
-                        F.lit(f"'{MASKED}'")
-                        if (mask_columns and k in mask_columns)
-                        else python_repr_column(F.col(k), df.schema[k].dataType)
-                    )
-                    parts.append(F.concat(F.lit(f"('{k}', "), val_repr, F.lit(")")))
-                value_col = F.concat(F.lit("("), F.concat_ws(", ", *parts), F.lit(")"))
-
-            viol = viol_rows.select(
-                F.lit(cr.regel_id).alias("regelId"),
-                _ids_repr_col(df, id_cols).alias("identifierVeldWaarde"),
-                value_col.alias("afwijkendeAttribuutWaarde"),
-                *self._carry_cols(df),
-            )
-            # LAZY on purpose: materializing here (persist+count) contends
-            # with the fused scan for cores and extends the critical path
-            # (measured +11s at 32c/16M); at consumption the key-pruned
-            # semi-join re-scan runs on an otherwise idle cluster.
-            shaped = self._apply_violation_shape(
-                viol, n_rows_hint=unexpected, persisted_frames=persisted_frames
-            )
-        return dup_keys, unexpected, n_groups, shaped
-
-    def _finish_uniqueness(
-        self,
-        cr: CompiledRule,
-        dup_stats,
-        total_rows: int,
-    ) -> tuple[RuleResult, DataFrame | None]:
-        _, unexpected, _, shaped = dup_stats
-        percent = (unexpected / total_rows * 100.0) if total_rows else None
-        result = RuleResult(
-            compiled=cr,
-            success=unexpected == 0,
-            element_count=total_rows,
-            unexpected_count=unexpected,
-            unexpected_percent=percent,
+        unexpected = int(stats["rows"])
+        if not unexpected:
+            return 0, None
+        # violations: rows participating in duplicate groups. The duplicate
+        # key set is usually tiny -> broadcast the semi-join.
+        join_side = dup_keys.select(*keys)
+        if int(stats["groups"]) <= 1_000_000:
+            join_side = F.broadcast(join_side)
+        viol_rows = df.join(join_side, on=keys, how="left_semi")
+        return unexpected, self._key_violations(
+            viol_rows, cr, keys, id_cols, mask_columns, unexpected, persisted_frames
         )
-        return result, shaped
-
-    # -- pass 4: referential -----------------------------------------------------------
 
     def _referential_violation_count(
         self,
@@ -891,12 +864,11 @@ class ValidationEngine:
         cr: CompiledRule,
         id_cols: list[str],
         mask_columns: list[str] | None,
-        persisted_frames: list | None = None,
-    ):
+        persisted_frames: list[DataFrame],
+    ) -> tuple[int, DataFrame | None]:
         """FULL referential work on a pool thread (overlaps the fused scan):
         left-anti join + count, and — when violations exist — the shaped
-        violation frame persisted and materialized here (same rationale as
-        _dup_key_stats).
+        violation frame (same rationale as _dup_key_stats).
 
         Join strategy is SIZE-GUARDED like the uniqueness path
         (_dup_key_stats): the distinct reference key set is persisted and
@@ -913,6 +885,7 @@ class ValidationEngine:
             )
         c = cr.attribute
         ref_keys = ref_df.select(F.col(cr.ref_column).alias(c)).distinct().persist()
+        persisted_frames.append(ref_keys)
         # one aggregate over the persisted keys yields count AND average
         # serialized width — the byte estimate keeps wide string keys from
         # slipping under the row-count guard
@@ -924,42 +897,11 @@ class ValidationEngine:
         est_bytes = int(n_keys * float(stats["w"] or 0.0))
         viol_rows = referential_anti_join(df, ref_keys, n_keys, c, est_bytes)
         unexpected = int(viol_rows.agg(F.count(F.lit(1)).alias("u")).collect()[0]["u"])
-        shaped = None
-        if unexpected:
-            value_col = (
-                F.lit(MASKED)
-                if (mask_columns and c in mask_columns)
-                else F.col(c).cast("string")
-            )
-            viol = viol_rows.select(
-                F.lit(cr.regel_id).alias("regelId"),
-                _ids_repr_col(df, id_cols).alias("identifierVeldWaarde"),
-                value_col.alias("afwijkendeAttribuutWaarde"),
-                *self._carry_cols(df),
-            )
-            shaped = self._apply_violation_shape(
-                viol, n_rows_hint=unexpected, persisted_frames=persisted_frames
-            )
-        return unexpected, shaped, ref_keys
-
-    def _finish_referential(
-        self,
-        cr: CompiledRule,
-        ref_stats,
-        total_rows: int,
-    ) -> tuple[RuleResult, DataFrame | None]:
-        unexpected, shaped, _ = ref_stats
-        percent = None
-        if total_rows:
-            percent = unexpected / total_rows * 100.0
-        result = RuleResult(
-            compiled=cr,
-            success=unexpected == 0,
-            element_count=total_rows,
-            unexpected_count=unexpected,
-            unexpected_percent=percent,
+        if not unexpected:
+            return 0, None
+        return unexpected, self._key_violations(
+            viol_rows, cr, [c], id_cols, mask_columns, unexpected, persisted_frames
         )
-        return result, shaped
 
     # -- result assembly -------------------------------------------------------------
 

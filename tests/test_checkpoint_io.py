@@ -2,22 +2,19 @@
 
 The round-2 hazard: a per-bucket ``pmod(xxhash64(cols), n) == b`` filter is
 opaque to storage-format filter APIs, so an n-bucket resume loop costs n full
-input scans. These tests prove the ``values`` strategy costs ~1 scan total on
-a partitioned input and produces pushdown-able predicates everywhere, and
-that the ``stage`` strategy bounds IO for unpartitioned inputs.
+input scans. These tests prove the value-predicate buckets cost ~1 scan total
+on a partitioned input and produce pushdown-able predicates everywhere, and
+that the hash-filter fallback above ``MAX_BUCKET_KEYS`` gives the same
+records.
 """
-
-import json
 
 import pytest
 from pyspark.sql import functions as F
 
-from dq_suite_amsterdam_spark import ValidationSettings
+from dq_suite_amsterdam_spark import ValidationSettings, checkpoint
 from dq_suite_amsterdam_spark.checkpoint import (
-    RunLedger,
     _bucket_expr,
     run_partitioned_validation,
-    stage_bucketed_copy,
     value_bucket_predicates,
 )
 from dq_suite_amsterdam_spark.common import (
@@ -129,11 +126,14 @@ def test_empty_bucket_runs_no_scan(spark, partitioned_input):
 
 
 def test_values_strategy_matches_hash_strategy_records(
-    spark, partitioned_input, tmp_path
+    spark, partitioned_input, tmp_path, monkeypatch
 ):
     doc = _make_doc()
     records = {}
     for strategy in ("values", "hash"):
+        if strategy == "hash":
+            # < 12 distinct (repo, lang) tuples: the hash-filter fallback
+            monkeypatch.setattr(checkpoint, "MAX_BUCKET_KEYS", 3)
         records[strategy] = run_partitioned_validation(
             spark,
             partitioned_input,
@@ -143,7 +143,6 @@ def test_values_strategy_matches_hash_strategy_records(
             tmp_path / f"{strategy}.jsonl",
             partition_columns=PCOLS,
             n_buckets=N_BUCKETS,
-            bucket_strategy=strategy,
         )
     strip = lambda rs: [  # noqa: E731
         {k: r[k] for k in ("bucket", "inputRows", "violationRows")} for r in rs
@@ -151,55 +150,14 @@ def test_values_strategy_matches_hash_strategy_records(
     assert strip(records["values"]) == strip(records["hash"])
 
 
-def test_stage_strategy_bounds_io(spark, flat_input, tmp_path):
-    """stage: ONE staging pass, then per-bucket reads prune to their own
-    bucket partition; a resumed run reuses the staged copy."""
-    doc = _make_doc()
-    stage = str(tmp_path / "staged")
-    ledger = tmp_path / "ledger.jsonl"
-    first = run_partitioned_validation(
-        spark,
-        flat_input,
-        doc,
-        "t",
-        ValidationSettings(table_name="t"),
-        ledger,
-        partition_columns=PCOLS,
-        n_buckets=N_BUCKETS,
-        bucket_strategy="stage",
-        stage_path=stage,
-    )
-    assert sum(r["inputRows"] for r in first) == flat_input.count()
-    # staged copy is hive-partitioned by bucket and per-bucket reads prune
-    staged = spark.read.parquet(stage)
-    full = file_scan_stats(staged)
-    one = file_scan_stats(staged.filter(F.col("__dq_bucket") == first[0]["bucket"]))
-    assert one[1] < full[1]  # strictly fewer files than the full staged copy
-    # crash-resume: drop one mark; the staged copy must NOT be rewritten
-    success = tmp_path / "staged" / "_SUCCESS"
-    mtime = success.stat().st_mtime_ns
-    recs = [r for r in RunLedger(ledger).records() if r["bucket"] != 2]
-    ledger.write_text("\n".join(json.dumps(r) for r in recs) + "\n")
-    rerun = run_partitioned_validation(
-        spark,
-        flat_input,
-        doc,
-        "t",
-        ValidationSettings(table_name="t"),
-        ledger,
-        partition_columns=PCOLS,
-        n_buckets=N_BUCKETS,
-        bucket_strategy="stage",
-        stage_path=stage,
-    )
-    assert [r["bucket"] for r in rerun] == [2]
-    assert success.stat().st_mtime_ns == mtime  # staging pass not repeated
-
-
-def test_values_falls_back_when_too_many_keys(spark, partitioned_input, tmp_path):
-    """Beyond max_distinct_keys the IN-lists would bloat the plan: falls
+def test_values_falls_back_when_too_many_keys(
+    spark, partitioned_input, tmp_path, monkeypatch
+):
+    """Beyond MAX_BUCKET_KEYS the IN-lists would bloat the plan: falls
     back to the hash filter (still correct, documented amplification)."""
     doc = _make_doc()
+    monkeypatch.setattr(checkpoint, "MAX_BUCKET_KEYS", 3)  # < 12 distinct tuples
+    assert value_bucket_predicates(partitioned_input, PCOLS, N_BUCKETS) is None
     records = run_partitioned_validation(
         spark,
         partitioned_input,
@@ -209,10 +167,25 @@ def test_values_falls_back_when_too_many_keys(spark, partitioned_input, tmp_path
         tmp_path / "fb.jsonl",
         partition_columns=PCOLS,
         n_buckets=N_BUCKETS,
-        bucket_strategy="values",
-        max_distinct_keys=3,  # < 12 distinct (repo, lang) tuples
     )
     assert sum(r["inputRows"] for r in records) == partitioned_input.count()
+
+
+@pytest.mark.parametrize("n_buckets", [0, -1])
+def test_n_buckets_below_one_rejected(spark, partitioned_input, tmp_path, n_buckets):
+    """n_buckets < 1 would process zero buckets and report success."""
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_partitioned_validation(
+            spark,
+            partitioned_input,
+            _make_doc(),
+            "t",
+            ValidationSettings(table_name="t"),
+            tmp_path / "nb.jsonl",
+            partition_columns=PCOLS,
+            n_buckets=n_buckets,
+        )
+    assert not (tmp_path / "nb.jsonl").exists()
 
 
 def test_afwijking_written_partitioned(spark, partitioned_input, tmp_path):
@@ -254,28 +227,6 @@ def test_afwijking_written_partitioned(spark, partitioned_input, tmp_path):
     assert file_scan_stats(sliced)[0] < file_scan_stats(afw)[0]  # pruned
     assert sliced.count() > 0
     assert partition_filters(sliced)
-
-
-def test_stage_meta_mismatch_restages(spark, flat_input, tmp_path):
-    """ADVICE r03 (medium): a staged copy built with DIFFERENT n_buckets
-    must not be reused — the bucket loop would read only __dq_bucket
-    0..n-1 of stale data and silently skip the rest."""
-    stage = str(tmp_path / "staged_meta")
-    stage_bucketed_copy(spark, flat_input, PCOLS, 4, stage)
-    success = tmp_path / "staged_meta" / "_SUCCESS"
-    mtime = success.stat().st_mtime_ns
-    # same parameters: reused, no rewrite
-    stage_bucketed_copy(spark, flat_input, PCOLS, 4, stage)
-    assert success.stat().st_mtime_ns == mtime
-    # fewer buckets: MUST re-stage; every row lands in __dq_bucket < 2
-    restaged = stage_bucketed_copy(spark, flat_input, PCOLS, 2, stage)
-    assert success.stat().st_mtime_ns != mtime
-    assert restaged.count() == flat_input.count()
-    assert restaged.agg(F.max("__dq_bucket")).collect()[0][0] < 2
-    # different input snapshot: also re-stages
-    mtime2 = success.stat().st_mtime_ns
-    stage_bucketed_copy(spark, flat_input, PCOLS, 2, stage, input_snapshot="v2")
-    assert success.stat().st_mtime_ns != mtime2
 
 
 def test_bucket_predicates_disjoint_under_separator_aliasing(spark):

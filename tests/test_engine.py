@@ -111,6 +111,11 @@ def test_uniqueness_rule(spark, people):
     assert len(a) == 2
     assert all(x["identifierVeldWaarde"] == "[[5]]" for x in a)
     assert all(x["afwijkendeAttribuutWaarde"] == "5" for x in a)
+    # a violation_limit caps the afwijking rows, not the count
+    settings = ValidationSettings(table_name="tbl", violation_limit=1)
+    res = run_validation(spark, people, doc, "tbl", settings=settings)
+    assert by_rule(res, "ExpectColumnValuesToBeUnique").unexpected_count == 2
+    assert [x["identifierVeldWaarde"] for x in res.afwijking.collect()] == ["[[5]]"]
 
 
 def test_compound_uniqueness_rule(spark, people):
@@ -240,6 +245,43 @@ def test_referential_rule(spark, people):
     assert r.unexpected_count == 1
     a = res.afwijking.collect()
     assert a[0]["afwijkendeAttribuutWaarde"] == "XX"
+    # grouped mode: one row per deviating value
+    settings = ValidationSettings(table_name="tbl", violation_mode="grouped")
+    res = run_validation(
+        spark, people, doc, "tbl", settings=settings, ref_tables={"lookup": lookup}
+    )
+    a = res.afwijking.collect()
+    assert len(a) == 1
+    assert a[0]["identifierVeldWaarde"] == "[[3]]"
+    assert a[0]["afwijkendeAttribuutWaarde"] == "XX"
+
+
+def test_failed_run_releases_persisted_frames(spark, people):
+    """A pass that raises (here: the referential rule's reference table is
+    missing, found only after the fused scan has persisted its violation
+    frame) must not leave frames persisted for a later run to reuse."""
+    doc = make_doc(
+        [
+            Rule("ExpectColumnValuesToNotBeNull", {"column": "name"}),
+            Rule(
+                "ExpectColumnValuesToBeInReferenceTable",
+                {"column": "country", "reference_table": "missing", "reference_column": "code"},
+            ),
+        ]
+    )
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="ref_tables"):
+        run_validation(spark, people, doc, "tbl")
+    assert jsc.getPersistentRDDs().size() == before
+
+
+@pytest.mark.parametrize("limit", [0, -1])
+def test_violation_limit_below_one_rejected(limit):
+    """0 would read as 'no limit' (falsy) and a negative limit would drop
+    every afwijking row of a failing rule."""
+    with pytest.raises(ValueError, match="violation_limit"):
+        ValidationSettings(table_name="tbl", violation_limit=limit)
 
 
 def test_masking(spark, people):
